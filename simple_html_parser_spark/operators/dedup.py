@@ -11,6 +11,14 @@ ops (JVM-side, shuffle-conscious) — no Python UDFs:
   self-join is on (band, signature) buckets, never all-pairs)
 - SimHash: 64-bit signature + banded hamming candidate join
 
+The near-dup methods (and similarity.py's SRP-LSH / SemDeDup) share
+one band → pair → verify skeleton: each supplies its band keys and
+its similarity; ``_bucket_pairs`` owns the banded explode, the
+hot-bucket cap and the distinct candidate pairs, ``_pair_join`` the
+narrow ``a.id < b.id`` self-join, ``_with_sides`` the join that brings
+per-id features to both pair sides, and ``dedup_clusters`` the
+connected components over the verified pairs.
+
 Scale notes: the shingle self-join shuffles on the shingle string —
 frequent shingles create hot keys, so shingles occurring in more than
 ``max_shingle_df`` docs are dropped (standard df-cut; also removes
@@ -19,8 +27,13 @@ uninformative shingles).  MinHash/LSH buckets are likewise capped.
 
 from __future__ import annotations
 
+import functools
+import operator
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from .reuse import reuse
 
 
 def tokens_col(text: Column = None) -> Column:
@@ -59,6 +72,81 @@ def _exploded_shingles(docs: DataFrame, n: int) -> DataFrame:
     )
 
 
+# --- near-dup skeleton: band → pair → verify -----------------------------
+
+def _check_cap(name: str, cap: int | None) -> None:
+    """Caps are >= 1 or None (disabled); 0/negative are rejected loudly
+    rather than silently disabling the cap (falsy-zero trap)."""
+    if cap is not None and cap < 1:
+        raise ValueError(f"{name} must be >= 1 or None, got {cap}")
+
+
+def _pair_ids(id_col: str) -> tuple[str, str]:
+    """Pair column names of an id column: doc_id → (doc_a, doc_b)."""
+    return id_col.replace("_id", "_a"), id_col.replace("_id", "_b")
+
+
+def _pair_join(df: DataFrame, id_col: str, keys: list[str],
+               *extra: Column) -> DataFrame:
+    """The narrow self-join: rows of ``df`` equal on every ``keys``
+    column, each unordered pair once (a.id < b.id) →
+    (<id>_a, <id>_b, *extra); ``extra`` reads either side as
+    ``a.<col>`` / ``b.<col>``."""
+    a, b = df.alias("a"), df.alias("b")
+    on = functools.reduce(operator.and_, [
+        F.col(f"a.{k}") == F.col(f"b.{k}") for k in keys
+    ] + [F.col(f"a.{id_col}") < F.col(f"b.{id_col}")])
+    ida, idb = _pair_ids(id_col)
+    return a.join(b, on).select(F.col(f"a.{id_col}").alias(ida),
+                                F.col(f"b.{id_col}").alias(idb), *extra)
+
+
+def _bucket_pairs(df: DataFrame, id_col: str, keys: list[Column],
+                  max_bucket: int | None = None,
+                  carry: tuple[str, ...] = (),
+                  extra: tuple[Column, ...] = (),
+                  checkpoint: bool = False) -> DataFrame:
+    """Band → pair: one (band, key) row per band key in ``keys``
+    (``carry`` columns ride along for ``extra``), buckets holding more
+    than ``max_bucket`` rows dropped via a broadcast anti-join, then
+    the (band, key) self-join → distinct (<id>_a, <id>_b, *extra).
+
+    The cap bounds the O(bucket²) pairs a hot bucket (template pages,
+    near-empty docs) would put in one join task; a true pair is lost
+    only if every band it agrees on is hot.  ``checkpoint`` cuts the
+    plan at the banded frame, which feeds the hot-bucket count and
+    both join sides: an expensive signature pass (simhash's vote fold,
+    SRP's projections) then runs once, not once per consumer."""
+    banded = df.select(id_col, *carry, F.explode(F.array(*[
+        F.struct(F.lit(b).alias("band"), k.alias("key"))
+        for b, k in enumerate(keys)])).alias("bb")) \
+        .select(id_col, *carry, "bb.band", "bb.key")
+    if checkpoint:
+        banded = reuse(banded, None, checkpoint=True)
+    if max_bucket is not None:
+        hot = (banded.groupBy("band", "key").count()
+               .where(F.col("count") > max_bucket).select("band", "key"))
+        banded = banded.join(F.broadcast(hot), ["band", "key"],
+                             "left_anti")
+    return _pair_join(banded, id_col, ["band", "key"], *extra).distinct()
+
+
+def _with_sides(pairs: DataFrame, feats: DataFrame,
+                id_col: str) -> DataFrame:
+    """Per-id features on both pair sides: every non-id column c of
+    ``feats`` arrives as c_a (joined on <id>_a) and c_b (on <id>_b).
+    Plain equi-joins, no broadcast hint: ``feats`` is per-id, i.e.
+    corpus-proportional, and a forced BroadcastExchange would collect
+    it to the driver at 10^12 docs (VERDICT r03 "What's wrong" #1);
+    AQE still demotes to broadcast when the stats say small."""
+    cols = [c for c in feats.columns if c != id_col]
+    for side, pid in zip("ab", _pair_ids(id_col)):
+        pairs = pairs.join(feats.select(
+            F.col(id_col).alias(pid),
+            *[F.col(c).alias(f"{c}_{side}") for c in cols]), pid)
+    return pairs
+
+
 def dedup_exact(docs: DataFrame) -> DataFrame:
     """Keep the lowest doc_id per exact text; returns
     (doc_id, n_copies).  One hash-aggregate shuffle on text."""
@@ -85,38 +173,27 @@ AUTO_DF_FLOOR = 50
 AUTO_DF_FRACTION = 0.01
 
 
-def _hot_shingles(docs: DataFrame, n: int,
-                  max_shingle_df: int | str | None,
-                  exploded: DataFrame | None = None) -> DataFrame | None:
-    """The boilerplate-shingle list for the df-cut (None = no cut).
-    Small by construction (Zipf head), so callers broadcast it."""
+def _df_cut(docs: DataFrame, ex: DataFrame,
+            max_shingle_df: int | str | None) -> DataFrame:
+    """``ex`` (doc_id, sh) minus the boilerplate shingles present in
+    more than ``max_shingle_df`` docs (None = no cut).  The hot list is
+    small by construction (Zipf head), so it is broadcast."""
     if not max_shingle_df:
-        return None
-    ex = exploded if exploded is not None else _exploded_shingles(docs, n)
+        return ex
+    df_counts = ex.groupBy("sh").count()
     if max_shingle_df == "auto":
         # fully declarative relative cut: no driver-side count action —
         # the 1-row corpus count is broadcast into the df filter
         total = docs.agg(F.count("*").alias("_n_docs"))
-        return (ex.groupBy("sh").count()
-                .crossJoin(F.broadcast(total))
-                .where(F.col("count") > F.greatest(
-                    F.lit(AUTO_DF_FLOOR).cast("bigint"),
-                    F.floor(F.col("_n_docs") * AUTO_DF_FRACTION)
-                    .cast("bigint")))
-                .select("sh"))
-    return (ex.groupBy("sh").count()
-            .where(F.col("count") > max_shingle_df).select("sh"))
-
-
-def _shingle_exploded(docs: DataFrame, n: int,
-                      max_shingle_df: int | str | None,
-                      hot: DataFrame | None = None) -> DataFrame:
-    ex = _exploded_shingles(docs, n)
-    if hot is None:
-        hot = _hot_shingles(docs, n, max_shingle_df)
-    if hot is not None:
-        ex = ex.join(F.broadcast(hot), "sh", "left_anti")
-    return ex
+        hot = (df_counts.crossJoin(F.broadcast(total))
+               .where(F.col("count") > F.greatest(
+                   F.lit(AUTO_DF_FLOOR).cast("bigint"),
+                   F.floor(F.col("_n_docs") * AUTO_DF_FRACTION)
+                   .cast("bigint")))
+               .select("sh"))
+    else:
+        hot = df_counts.where(F.col("count") > max_shingle_df).select("sh")
+    return ex.join(F.broadcast(hot), "sh", "left_anti")
 
 
 def shingle_drop_stats(
@@ -129,7 +206,7 @@ def shingle_drop_stats(
     and are invisible to the near-dup operators.  Run alongside any
     pipeline that enables ``max_shingle_df`` and alert when the dropped
     fraction is non-trivial."""
-    ex = _shingle_exploded(docs, n, max_shingle_df)
+    ex = _df_cut(docs, _exploded_shingles(docs, n), max_shingle_df)
     survivors = ex.select("doc_id").distinct()
     return (
         docs.select("doc_id")
@@ -138,6 +215,18 @@ def shingle_drop_stats(
         .crossJoin(F.broadcast(
             docs.agg(F.count("*").alias("n_docs"))))
         .select("n_docs", "n_docs_no_shingles")
+    )
+
+
+def _jaccard_verified(pairs: DataFrame, n_a: Column, n_b: Column,
+                      threshold: float) -> DataFrame:
+    """Exact Jaccard of pairs carrying their shingle intersection size
+    ``inter`` → (doc_a, doc_b, jaccard ≥ threshold), 6dp."""
+    return (
+        pairs.withColumn("jaccard", F.round(
+            F.col("inter") / (n_a + n_b - F.col("inter")), 6))
+        .where(F.col("jaccard") >= threshold)
+        .select("doc_a", "doc_b", "jaccard")
     )
 
 
@@ -158,55 +247,22 @@ def dedup_ngram_jaccard(
     df-cut, the size aggregate, and the self-join.  The cache lives
     until the session ends unless the caller passes a list here and
     unpersists its entries once the returned frame is materialized."""
-    from pyspark import StorageLevel
-
-    ex_raw = _exploded_shingles(docs, n)
+    ex = _exploded_shingles(docs, n)
     if max_shingle_df:
         # ONE tokenize+shingle pass shared by df-cut + join + sizes
         # (previously the cut recomputed the exploded frame — the r2
         # bench regression on this query)
-        ex_raw = ex_raw.persist(StorageLevel.MEMORY_AND_DISK)
-        if unpersist_handles is not None:
-            unpersist_handles.append(ex_raw)
-    hot = _hot_shingles(docs, n, max_shingle_df, exploded=ex_raw)
-    ex = ex_raw if hot is None \
-        else ex_raw.join(F.broadcast(hot), "sh", "left_anti")
-    # consumed twice (sa and sb below) — persist so the per-doc count
+        ex = reuse(ex, unpersist_handles)
+    ex = _df_cut(docs, ex, max_shingle_df)
+    # consumed twice (both pair sides) — persisted so the per-doc count
     # aggregation runs once, not once per join side (two ints per doc;
     # the union-branch non-CSE class, see dedup_minhash_lsh's sets)
-    sizes = ex.groupBy("doc_id").agg(F.count("*").alias("n_sh")) \
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    if unpersist_handles is not None:
-        unpersist_handles.append(sizes)
-
-    a = ex.alias("a")
-    b = ex.alias("b")
-    inter = (
-        a.join(b, (F.col("a.sh") == F.col("b.sh"))
-               & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .groupBy(F.col("a.doc_id").alias("doc_a"),
-                 F.col("b.doc_id").alias("doc_b"))
-        .agg(F.count("*").alias("inter"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("doc_a"),
-                      F.col("n_sh").alias("n_a"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"),
-                      F.col("n_sh").alias("n_b"))
-    # No broadcast hints on sa/sb: they are per-document frames (one
-    # row per doc), i.e. corpus-proportional — a mandatory
-    # BroadcastExchange would collect the whole doc list to the driver
-    # at 10^12 docs (VERDICT r03 "What's wrong" #1).  Plain equi-joins
-    # shuffle on doc_a/doc_b, co-partitioned with `inter`'s groupBy
-    # output; AQE still demotes to broadcast when the stats say small.
-    return (
-        inter.join(sa, "doc_a").join(sb, "doc_b")
-        .withColumn(
-            "jaccard",
-            F.round(F.col("inter")
-                    / (F.col("n_a") + F.col("n_b") - F.col("inter")), 6))
-        .where(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "jaccard")
-    )
+    sizes = reuse(ex.groupBy("doc_id").agg(F.count("*").alias("n_sh")),
+                  unpersist_handles)
+    inter = (_pair_join(ex, "doc_id", ["sh"])
+             .groupBy("doc_a", "doc_b").agg(F.count("*").alias("inter")))
+    return _jaccard_verified(_with_sides(inter, sizes, "doc_id"),
+                             F.col("n_sh_a"), F.col("n_sh_b"), threshold)
 
 
 def minhash_signatures(
@@ -254,67 +310,23 @@ def dedup_minhash_lsh(
     (cost: O(Σ bucket²) candidates + O(|shingles|) per verified pair,
     vs O(Σ df(sh)²) for the exact form).  ``max_bucket=None`` disables
     the bucket cap; 0/negative are rejected (falsy-zero trap)."""
-    from pyspark import StorageLevel
-
-    if max_bucket is not None and max_bucket < 1:
-        raise ValueError(
-            f"max_bucket must be >= 1 or None, got {max_bucket}")
-
+    _check_cap("max_bucket", max_bucket)
     rows_per_band = num_hashes // bands
     # ONE tokenize+shingle pass over the corpus, persisted; the hot
     # list (df-cut), the signatures, and the candidate verification
     # sets are all cheap derivations of it.  Tokenization is the
-    # dominant per-byte cost, so it must not run 3x.  MEMORY_AND_DISK:
-    # at scale the exploded frame spills rather than recomputing.
-    # Cache lifetime: the three persisted frames stay cached until the
-    # session ends (eviction handles pressure) unless the caller passes
-    # ``unpersist_handles`` and releases them after materializing the
-    # result — kept caller-controlled because unpersisting eagerly here
-    # would either force evaluation or silently drop fault-tolerant
-    # recompute lineage at cluster scale.
-    ex_raw = _exploded_shingles(docs, n) \
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    hot = _hot_shingles(docs, n, max_shingle_df, exploded=ex_raw)
-    ex = ex_raw if hot is None \
-        else ex_raw.join(F.broadcast(hot), "sh", "left_anti")
-    # signatures: small result (doc_id + k longs), persisted so the
-    # banded self-join doesn't aggregate twice
-    sigs = minhash_signatures(docs, n, num_hashes, exploded=ex) \
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    if unpersist_handles is not None:
-        unpersist_handles.append(ex_raw)
-        unpersist_handles.append(sigs)
-    banded = sigs.select(
-        "doc_id",
-        F.explode(F.array(*[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.xxhash64(*[F.col("sig")[b * rows_per_band + r]
-                             for r in range(rows_per_band)]).alias("bsig"),
-            ) for b in range(bands)
-        ])).alias("bb"),
-    ).select("doc_id", "bb.band", "bb.bsig")
-
-    if max_bucket is not None:
-        hot_buckets = (banded.groupBy("band", "bsig").count()
-                       .where(F.col("count") > max_bucket)
-                       .select("band", "bsig"))
-        banded = banded.join(F.broadcast(hot_buckets), ["band", "bsig"],
-                             "left_anti")
-
-    a = banded.alias("a")
-    b = banded.alias("b")
-    cands = (
-        a.join(b, (F.col("a.band") == F.col("b.band"))
-               & (F.col("a.bsig") == F.col("b.bsig"))
-               & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .select(F.col("a.doc_id").alias("doc_a"),
-                F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    if unpersist_handles is not None:
-        unpersist_handles.append(cands)
+    # dominant per-byte cost, so it must not run 3x.  The signatures
+    # (doc_id + k longs) are persisted so the banded self-join doesn't
+    # aggregate twice.  All four frames persisted here stay cached
+    # until the caller releases ``unpersist_handles`` (see reuse.py).
+    ex_raw = reuse(_exploded_shingles(docs, n), unpersist_handles)
+    ex = _df_cut(docs, ex_raw, max_shingle_df)
+    sigs = reuse(minhash_signatures(docs, n, num_hashes, exploded=ex),
+                 unpersist_handles)
+    cands = reuse(_bucket_pairs(sigs, "doc_id", [
+        F.xxhash64(*[F.col("sig")[b * rows_per_band + r]
+                     for r in range(rows_per_band)])
+        for b in range(bands)], max_bucket), unpersist_handles)
     # candidate-restricted exact-Jaccard verification: shingle sets of
     # candidate docs only (left_semi prune on the persisted exploded
     # frame), one array_intersect per candidate pair.  NO all-pairs
@@ -324,36 +336,18 @@ def dedup_minhash_lsh(
         .union(cands.select(F.col("doc_b").alias("doc_id")))
         .distinct()
     )
-    # verification sets come from the SAME persisted shingle frame —
-    # semi-join prune to candidate docs, then collect per-doc sets.
-    # Persisted because the frame is consumed TWICE (the sa and sb
-    # sides of the pair join) and Catalyst re-runs the collect_set
-    # aggregation per consumer otherwise (the union-branch non-CSE
-    # class; r6 A/B, identical 256-pair output: warm 1.1-1.3 s ->
-    # 0.8-1.0 s).  Bounded by candidate docs, not the corpus.
-    sets = (
-        ex.join(cand_docs, "doc_id", "left_semi")
-        .groupBy("doc_id").agg(F.collect_set("sh").alias("shs"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    if unpersist_handles is not None:
-        unpersist_handles.append(sets)
-    sa = sets.select(F.col("doc_id").alias("doc_a"),
-                     F.col("shs").alias("shs_a"))
-    sb = sets.select(F.col("doc_id").alias("doc_b"),
-                     F.col("shs").alias("shs_b"))
-    inter = F.size(F.array_intersect("shs_a", "shs_b"))
-    return (
-        cands.join(sa, "doc_a").join(sb, "doc_b")
-        .withColumn("inter", inter)
-        .withColumn(
-            "jaccard",
-            F.round(F.col("inter")
-                    / (F.size("shs_a") + F.size("shs_b")
-                       - F.col("inter")), 6))
-        .where(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "jaccard")
-    )
+    # Persisted because the sets are consumed TWICE (the two pair
+    # sides) and Catalyst re-runs the collect_set aggregation per
+    # consumer otherwise (the union-branch non-CSE class; r6 A/B,
+    # identical 256-pair output: warm 1.1-1.3 s -> 0.8-1.0 s).
+    # Bounded by candidate docs, not the corpus.
+    sets = reuse(ex.join(cand_docs, "doc_id", "left_semi")
+                 .groupBy("doc_id").agg(F.collect_set("sh").alias("shs")),
+                 unpersist_handles)
+    pairs = _with_sides(cands, sets, "doc_id").withColumn(
+        "inter", F.size(F.array_intersect("shs_a", "shs_b")))
+    return _jaccard_verified(pairs, F.size("shs_a"), F.size("shs_b"),
+                             threshold)
 
 
 def simhash_signatures(docs: DataFrame, bits: int = 64) -> DataFrame:
@@ -400,7 +394,7 @@ def dedup_simhash(
     hamming verification via bit_count(xor).
 
     ``max_bucket`` prunes hot band buckets before the self-join — the
-    same cap dedup_minhash_lsh applies to (band, bsig).  A real crawl
+    same cap dedup_minhash_lsh applies to (band, key).  A real crawl
     has millions of near-empty/template pages whose simhashes collide
     into a handful of 16-bit band keys; without the cap one such
     bucket yields O(bucket²) candidate pairs in a single join task
@@ -411,54 +405,29 @@ def dedup_simhash(
     the shingle df-cut (see SCALE.md).  ``max_bucket=None`` disables
     the prune (exact-oracle form); 0/negative are rejected loudly
     rather than silently disabling it (falsy-zero trap)."""
-    if max_bucket is not None and max_bucket < 1:
-        raise ValueError(
-            f"max_bucket must be >= 1 or None, got {max_bucket}")
-    sigs = simhash_signatures(docs)
+    _check_cap("max_bucket", max_bucket)
     width = 64 // bands
-    # localCheckpoint the banded frame (doc_id, simhash, band, key —
-    # 4 ints per row, the srp_lsh convention): it feeds THREE
-    # consumers (the hot-bucket count and both self-join sides), and
-    # Catalyst re-evaluates the 64-bit interpreted vote fold of
-    # simhash_signatures once per consumer without it (r6 A/B at
-    # sf0.1 local[32], identical 6959-pair output: 4.3-5.0s -> 2.2-2.5s)
-    banded = sigs.select(
-        "doc_id", "simhash",
-        F.explode(F.array(*[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.shiftrightunsigned("simhash", b * width)
-                .bitwiseAND(F.lit((1 << width) - 1)).alias("key"),
-            ) for b in range(bands)
-        ])).alias("bb"),
-    ).select("doc_id", "simhash", "bb.band", "bb.key").localCheckpoint()
-    if max_bucket is not None:
-        hot_buckets = (banded.groupBy("band", "key").count()
-                       .where(F.col("count") > max_bucket)
-                       .select("band", "key"))
-        banded = banded.join(F.broadcast(hot_buckets), ["band", "key"],
-                             "left_anti")
-    a = banded.alias("a")
-    b = banded.alias("b")
-    return (
-        a.join(b, (F.col("a.band") == F.col("b.band"))
-               & (F.col("a.key") == F.col("b.key"))
-               & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .select(F.col("a.doc_id").alias("doc_a"),
-                F.col("b.doc_id").alias("doc_b"),
-                F.bit_count(F.col("a.simhash")
-                            .bitwiseXOR(F.col("b.simhash")))
-                .alias("hamming"))
-        .distinct()
-        .where(F.col("hamming") <= max_hamming)
-    )
+    # the banded frame (doc_id, simhash, band, key — 4 ints per row) is
+    # checkpointed: it feeds THREE consumers (the hot-bucket count and
+    # both self-join sides), and Catalyst re-evaluates the 64-bit
+    # interpreted vote fold of simhash_signatures once per consumer
+    # without it (r6 A/B at sf0.1 local[32], identical 6959-pair
+    # output: 4.3-5.0s -> 2.2-2.5s).  The simhash rides through the
+    # band explode, so verification needs no join back.
+    hamming = F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash")))
+    return _bucket_pairs(
+        simhash_signatures(docs), "doc_id", [
+            F.shiftrightunsigned("simhash", b * width)
+            .bitwiseAND(F.lit((1 << width) - 1)) for b in range(bands)],
+        max_bucket, carry=("simhash",), extra=(hamming.alias("hamming"),),
+        checkpoint=True,
+    ).where(F.col("hamming") <= max_hamming)
 
 
 def dedup_clusters(
     docs: DataFrame, n: int = 3, threshold: float = 0.8,
     max_shingle_df: int | str | None = None, max_iters: int = 80,
-    pairs: DataFrame | None = None, source: str = "lsh",
-    pointer_jump: bool = True,
+    pairs: DataFrame | None = None,
     unpersist_handles: list | None = None,
 ) -> DataFrame:
     """Connected components over the near-duplicate pair graph →
@@ -468,20 +437,20 @@ def dedup_clusters(
     near-cliques, so 2-3 iterations in practice).  Only docs that
     appear in at least one pair are emitted.
 
-    Scale shape: pairs come from ``dedup_minhash_lsh`` by default
-    (bucketed candidates + candidate-restricted verification — never an
-    all-pairs shingle join; ``source="exact"`` is the oracle form, same
-    output when LSH recall is 1.0, which holds at τ≤0.8 with 8×4
-    banding on this corpus — verified vs the DuckDB recursive-CTE
-    oracle at sf0.01 and sf0.1).  TWO propagation steps run per
-    ``localCheckpoint`` + convergence-count round: the label frame is
-    materialized every 2nd iteration (plan depth between checkpoints
-    stays ≤ 2 join levels), halving the driver-side materialization
-    jobs that dominated curate_web's warm wall (r4 event-log audit:
-    ~1.3s per checkpoint job at sf0.1).  The 2-step convergence test
-    is sound because min-label propagation is MONOTONE — labels only
-    decrease — so no oscillation exists and f²(x) = x implies
-    f(x) = x.
+    Scale shape: pairs come from ``dedup_minhash_lsh`` (bucketed
+    candidates + candidate-restricted verification — never an
+    all-pairs shingle join; same output as the exact
+    ``dedup_ngram_jaccard`` pairs when LSH recall is 1.0, which holds
+    at τ≤0.8 with 8×4 banding on this corpus — verified vs the DuckDB
+    recursive-CTE oracle at sf0.01 and sf0.1).  TWO propagation steps
+    run per ``localCheckpoint`` + convergence-count round: the label
+    frame is materialized every 2nd iteration (plan depth between
+    checkpoints stays ≤ 2 join levels), halving the driver-side
+    materialization jobs that dominated curate_web's warm wall (r4
+    event-log audit: ~1.3s per checkpoint job at sf0.1).  The 2-step
+    convergence test is sound because min-label propagation is
+    MONOTONE — labels only decrease — so no oscillation exists and
+    f²(x) = x implies f(x) = x.
 
     ``max_iters`` bounds STEPS (2 per round); with the per-round
     pointer jump the reach grows geometrically, so 80 steps = 40
@@ -497,14 +466,17 @@ def dedup_clusters(
     second full job per round until r5 (the r5 A/B on this exact
     query: see BENCH/BASELINE.md §curation_pipeline).
 
-    ``pointer_jump=False`` disables the per-round shortcut self-join
-    (A/B instrumentation; near-clique graphs converge identically
-    without it, chain graphs need it)."""
+    Every checkpoint (pair list, edges, labels, one per round) is
+    registered in ``unpersist_handles``; release them only after the
+    returned frame is materialized — it reads the last one."""
     if pairs is None:
-        fn = dedup_ngram_jaccard if source == "exact" else dedup_minhash_lsh
-        pairs = fn(docs, n=n, threshold=threshold,
-                   max_shingle_df=max_shingle_df,
-                   unpersist_handles=unpersist_handles)
+        pairs = dedup_minhash_lsh(docs, n=n, threshold=threshold,
+                                  max_shingle_df=max_shingle_df,
+                                  unpersist_handles=unpersist_handles)
+
+    def ckpt(df: DataFrame) -> DataFrame:
+        return reuse(df, unpersist_handles, checkpoint=True)
+
     # Materialize the pair list ONCE before symmetrizing: `pairs`
     # appears in BOTH branches of the union below, and Catalyst does
     # not share subtrees across union branches, so without this
@@ -514,19 +486,18 @@ def dedup_clusters(
     # the un-persisted per-candidate-doc shingle-set aggregation was
     # the re-executed half; post-fix the edges job reads the
     # checkpointed pair partitions twice instead).
-    pairs = pairs.select("doc_a", "doc_b").localCheckpoint()
-    edges = pairs.union(
+    pairs = ckpt(pairs.select("doc_a", "doc_b"))
+    edges = ckpt(pairs.union(
         pairs.select(F.col("doc_b").alias("doc_a"),
-                     F.col("doc_a").alias("doc_b"))).distinct() \
-        .localCheckpoint()
+                     F.col("doc_a").alias("doc_b"))).distinct())
 
-    labels = (
+    labels = ckpt(
         edges.groupBy("doc_a")
         .agg(F.least(F.min("doc_b"), F.first("doc_a")).alias("label"))
         .select(F.col("doc_a").alias("doc_id"),
                 F.least("label", "doc_a").alias("cluster_id"))
-        .localCheckpoint()
     )
+
     def step(cur: DataFrame) -> DataFrame:
         # propagate: new label = min(own, min over neighbours' labels);
         # the round-start 'prev' column rides along untouched
@@ -579,11 +550,9 @@ def dedup_clusters(
         if steps_done < max_iters:
             r = step(r)
             steps_done += 1
-        if pointer_jump:
-            r = shortcut(r)
         # one materialization job per round, then a fixpoint probe on
         # the checkpointed partitions (no second shuffle join)
-        mat = r.localCheckpoint()
+        mat = ckpt(shortcut(r))
         converged = mat.where(
             F.col("cluster_id") != F.col("prev")).isEmpty()
         cur = mat.select("doc_id", "cluster_id")
@@ -635,12 +604,11 @@ def dedup_lines(docs: DataFrame, seg_len: int = 8,
     Bounds: doc_id < 2⁴¹ (ANSI overflow throws in the multiply) and
     seg_idx < 2²² (a 33M-token doc, far past any length filter) —
     the seg_idx bound would NOT overflow, it would silently collide
-    with the next doc's keys, so it is ENFORCED with raise_error.  The seg→winner join back is a shuffle join
-    on the same key (AQE skew-split applies); reassembly is one agg on
-    doc_id.  At prod, shuffle on xxhash64(seg) instead of the raw
-    string to shrink exchange width."""
-    from pyspark import StorageLevel
-
+    with the next doc's keys, so it is ENFORCED with raise_error.  The
+    seg→winner join back is a shuffle join on the same key (AQE
+    skew-split applies); reassembly is one agg on doc_id.  At prod,
+    shuffle on xxhash64(seg) instead of the raw string to shrink
+    exchange width."""
     key = F.when(
         F.col("seg_idx") < F.lit(1 << 22),
         F.col("doc_id") * F.lit(1 << 22).cast("bigint")
@@ -651,16 +619,12 @@ def dedup_lines(docs: DataFrame, seg_len: int = 8,
     # ONE persisted explode feeds both the winner election and the
     # probe side (same discipline as dedup_minhash_lsh's shingle
     # frame) — without it the corpus is tokenized+exploded twice
-    segs = (
+    segs = reuse(
         docs.select("doc_id", tokens_col().alias("_toks"))
         .select("doc_id",
                 F.posexplode(segments_col(seg_len, F.col("_toks")))
                 .alias("seg_idx", "seg"))
-        .withColumn("_k", key)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    if unpersist_handles is not None:
-        unpersist_handles.append(segs)
+        .withColumn("_k", key), unpersist_handles)
     winner = segs.groupBy("seg").agg(F.min("_k").alias("_wk"))
     kept = (
         segs.join(winner, "seg")
@@ -774,24 +738,8 @@ def dedup_substrings(docs: DataFrame, window: int = 32,
     because doc_id+start+row overhead amortize the key and LZ4
     compresses hex md5 harder than random bigints.
 
-    A third form, ``span_hash="poly"``, skips window-string
-    construction entirely: each TOKEN is hashed once to a 31-bit int
-    (the same char fold as doc_fingerprint), and each window key is a
-    two-base polynomial fold over the token-int slice — 2 bigint
-    mul+mod per element instead of copying ~w·avg_token bytes into a
-    string and md5-ing it, removing the ~w× hash-input write
-    amplification.  Key = h1·2^31 + h2 (62 bits effective, products
-    stay < 2^62: ANSI-safe).  pytest proves poly ≡ md5 output on
-    corpus text — but the 400k rehearsal REJECTED it for prod:
-    4048s vs md5's 1061s and xxhash64's 574s (SCALE_rehearsal.json).
-    The theory double-counted who pays: ``concat_ws + xxhash64`` is
-    one tight codegen'd memcpy+hash loop over the slice, while the
-    struct-accumulator ``F.aggregate`` fold evaluates a branchy
-    two-field lambda per element with no whole-stage fusion across
-    the nested HOFs — per-element interpreter overhead dwarfs the
-    byte-copy it saves.  Kept as the collision-free-key reference
-    form (62-bit keys, no string build) and a measured warning:
-    nested HOF folds are NOT cheaper than built-in hash kernels.
+    The string-free ``"poly"`` key (a polynomial fold over token
+    hashes) was dropped: 4048s vs md5's 1061s at 400k docs.
 
     The windows frame feeds BOTH the duplicate-count agg and the hit
     join, so the minhash-shingle precedent suggests persisting it —
@@ -801,47 +749,18 @@ def dedup_substrings(docs: DataFrame, window: int = 32,
     costs more than recomputing the stride-1 window hashes, unlike the
     shingle frame whose THREE consumers amortize it.  Recompute wins
     at two consumers; both shuffles are on the same key either way."""
-    M = 2147483647  # 2^31-1, the doc_fingerprint modulus
-    B1, B2 = 1000003, 999983
     toks_df = docs.select("doc_id", tokens_col().alias("_toks"))
     tk = F.col("_toks")
-    if span_hash == "poly":
-        # one 31-bit char-fold per token, materialized as a column so
-        # the per-window slices reference it (never re-fold: CSE trap)
-        toks_df = toks_df.withColumn(
-            "_th", F.transform(tk, lambda t: F.aggregate(
-                F.split(t, ""), F.lit(0).cast("bigint"),
-                lambda acc, c: (acc * 31 + F.ascii(c)) % M)))
-        th = F.col("_th")
-
-        def _win_key(i):
-            acc0 = F.struct(
-                F.lit(0).cast("bigint").alias("a"),
-                F.lit(0).cast("bigint").alias("b"))
-            return F.aggregate(
-                F.slice(th, i + 1, window), acc0,
-                lambda acc, x: F.struct(
-                    ((acc["a"] * B1 + x) % M).alias("a"),
-                    ((acc["b"] * B2 + x) % M).alias("b")),
-                lambda acc: acc["a"] * F.lit(2147483648) + acc["b"])
-        empty_t = "array<bigint>"
-    elif span_hash == "md5":
-        def _win_key(i):
-            return F.md5(F.concat_ws(" ", F.slice(tk, i + 1, window)))
-        empty_t = "array<string>"
-    elif span_hash == "xxhash64":
-        def _win_key(i):
-            return F.xxhash64(
-                F.concat_ws(" ", F.slice(tk, i + 1, window)))
-        empty_t = "array<bigint>"
-    else:
-        raise ValueError(
-            f"span_hash must be md5|xxhash64|poly: {span_hash}")
+    forms = {"md5": (F.md5, "array<string>"),
+             "xxhash64": (F.xxhash64, "array<bigint>")}
+    if span_hash not in forms:
+        raise ValueError(f"span_hash must be md5|xxhash64: {span_hash}")
+    span_fn, empty_t = forms[span_hash]
     wins_arr = F.when(
         F.size(tk) >= window,
         F.transform(
             F.sequence(F.lit(0), F.size(tk) - window),
-            _win_key),
+            lambda i: span_fn(F.concat_ws(" ", F.slice(tk, i + 1, window)))),
     ).otherwise(F.array().cast(empty_t))
     wins = (
         toks_df.select("doc_id", wins_arr.alias("_w"))

@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .dedup import tokens_col
+from .reuse import reuse
 
 MAX_W = 15  # floor(log2(65535)): weight of a cap-saturated bigram
 
@@ -75,10 +76,7 @@ def lm_fluency(docs: DataFrame, ref: DataFrame | None = None,
     """
     bg = bigrams_exploded(docs)
     if ref is None:
-        from pyspark import StorageLevel
-        bg = bg.persist(StorageLevel.MEMORY_AND_DISK)
-        if unpersist_handles is not None:
-            unpersist_handles.append(bg)
+        bg = reuse(bg, unpersist_handles)
     ref_bg = bg if ref is None else bigrams_exploded(ref)
     lm = (ref_bg.groupBy("lang", "b")
           .agg(F.count("*").alias("_c"))

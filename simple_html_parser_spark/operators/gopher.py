@@ -255,8 +255,11 @@ def massivetext_repetition(
     HOFs that consume it (memory/catalyst-cse-trap); run-length folds
     replace the O(G^2) count-per-distinct-gram form, which the DuckDB
     oracle uses instead (order-free, so engine sort collations cannot
-    diverge).  Coverage is O(L * n * |dups|) per row, bounded by the
-    upstream length filter like dedup_substrings' reconstruction."""
+    diverge).  Duplicate-n-gram coverage is O(L log L) per row: one
+    sort of (gram, position) pairs yields the duplicated window
+    positions (``_dup_pos_col``), and an interval-union fold over them
+    sums the covered token chars (``_covered_chars``) — no per-window
+    scan of a dup set."""
     TOP_TH = {2: 20, 3: 18, 4: 16}           # x/100 of token chars
     DUP_TH = {5: 15, 6: 14, 7: 13, 8: 12, 9: 11, 10: 10}
 

@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .dedup import _bucket_pairs, _check_cap, _pair_join, _with_sides
+
 
 def _dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -263,53 +265,31 @@ def embedding_srp_lsh_dedup(
          .otherwise(0)).alias(f"b{j}")
         for j, p in enumerate(planes)
     ]
-    sig = embeddings.select("vec_id", "embedding", *bit_cols)
-    band_structs = [
-        F.struct(
-            F.lit(b).alias("band"),
-            sum(F.col(f"b{b * bits_per_band + r}") * (1 << r)
-                for r in range(bits_per_band)).alias("key"),
-        ) for b in range(bands)
-    ]
+    sig = embeddings.select("vec_id", *bit_cols)
     # Plan shape (mirrors dedup_minhash_lsh, VERDICT r2 fix): the
     # banded frame carries ONLY (vec_id, band, key) — the 64-float
     # embedding never crosses the band exchange — and the candidate
     # pairs are distinct'd BEFORE verification, so each pair pays one
     # cosine, not one per shared band.  At 10^12 vectors: shuffle ids
-    # (bytes/row), not 4x the embedding table.
-    # localCheckpoint the (vec_id, band, key) frame — bands·n rows of
-    # 3 ints, driver-scale tiny at any corpus — so the 32-projection
+    # (bytes/row), not 4x the embedding table.  The banded frame —
+    # bands·n rows of 3 ints — is checkpointed so the 32-projection
     # signature pass runs ONCE, not once per self-join branch.
-    banded = sig.select(
-        "vec_id",
-        F.explode(F.array(*band_structs)).alias("bb"),
-    ).select("vec_id", "bb.band", "bb.key").localCheckpoint()
-    a = banded.alias("a")
-    b = banded.alias("b")
-    cands = (
-        a.join(b, (F.col("a.band") == F.col("b.band"))
-               & (F.col("a.key") == F.col("b.key"))
-               & (F.col("a.vec_id") < F.col("b.vec_id")))
-        .select(F.col("a.vec_id").alias("vec_a"),
-                F.col("b.vec_id").alias("vec_b"))
-        .distinct()
-    )
+    cands = _bucket_pairs(sig, "vec_id", [
+        sum(F.col(f"b{b * bits_per_band + r}") * (1 << r)
+            for r in range(bits_per_band))
+        for b in range(bands)], checkpoint=True)
     # Verify with per-VECTOR norms precomputed (n norm evaluations,
     # not 2 per candidate pair): higher-order-function array exprs are
     # the dominant per-pair cost, so the pair pays exactly one dot.
     # dot/(na*nb) is the same fp expression as cosine_sim, just with
     # the norm factors evaluated early — values are bit-identical.
-    ea = embeddings.select(F.col("vec_id").alias("vec_a"),
-                           F.col("embedding").alias("emb_a"),
-                           _norm(F.col("embedding")).alias("na"))
-    eb = embeddings.select(F.col("vec_id").alias("vec_b"),
-                           F.col("embedding").alias("emb_b"),
-                           _norm(F.col("embedding")).alias("nb"))
+    feats = embeddings.select("vec_id", "embedding",
+                              _norm(F.col("embedding")).alias("nrm"))
     return (
-        cands.join(ea, "vec_a").join(eb, "vec_b")
+        _with_sides(cands, feats, "vec_id")
         .select("vec_a", "vec_b",
-                F.round(_dot(F.col("emb_a"), F.col("emb_b"))
-                        / (F.col("na") * F.col("nb")), 6)
+                F.round(_dot(F.col("embedding_a"), F.col("embedding_b"))
+                        / (F.col("nrm_a") * F.col("nrm_b")), 6)
                 .alias("cos_sim"))
         .where(F.col("cos_sim") >= threshold)
     )
@@ -320,18 +300,11 @@ def embedding_knn_dedup(
 ) -> DataFrame:
     """Near-duplicate vector pairs (vec_a, vec_b, cos_sim ≥ τ) within
     the same coarse cluster — the bucketed (not all-pairs) self-join."""
-    a = embeddings.alias("a")
-    b = embeddings.alias("b")
-    return (
-        a.join(b, (F.col("a.label") == F.col("b.label"))
-               & (F.col("a.vec_id") < F.col("b.vec_id")))
-        .select(
-            F.col("a.vec_id").alias("vec_a"),
-            F.col("b.vec_id").alias("vec_b"),
-            cosine_sim(F.col("a.embedding"), F.col("b.embedding"))
-            .alias("cos_sim"))
-        .where(F.col("cos_sim") >= threshold)
-    )
+    return _pair_join(
+        embeddings, "vec_id", ["label"],
+        cosine_sim(F.col("a.embedding"), F.col("b.embedding"))
+        .alias("cos_sim"),
+    ).where(F.col("cos_sim") >= threshold)
 
 
 def semantic_dedup(
@@ -383,9 +356,7 @@ def semantic_dedup(
     concentrates mass in one cell and the join silently goes
     all-pairs.  ``None`` disables; 0/negative are rejected loudly
     (falsy-zero trap)."""
-    if max_cell is not None and max_cell < 1:
-        raise ValueError(
-            f"max_cell must be >= 1 or None, got {max_cell}")
+    _check_cap("max_cell", max_cell)
     cents = kmeans_centroids(embeddings, n_clusters, iters)
     va = embeddings.select(
         "vec_id", "embedding", _quant(F.col("embedding")).alias("qe"))
@@ -417,8 +388,6 @@ def semantic_dedup(
         withd = (withd.join(F.broadcast(cell_sizes), "cid")
                  .where(guard > 0)
                  .drop("_cn"))
-    a = withd.alias("a")
-    b = withd.alias("b")
     pair_cos = F.round(
         _dot(F.col("a.embedding"), F.col("b.embedding"))
         / (F.col("a.nrm") * F.col("b.nrm")), 6)
@@ -428,10 +397,10 @@ def semantic_dedup(
            & (F.col("a.vec_id") > F.col("b.vec_id"))),
         F.col("a.vec_id")).otherwise(F.col("b.vec_id"))
     dropped = (
-        a.join(b, (F.col("a.cid") == F.col("b.cid"))
-               & (F.col("a.vec_id") < F.col("b.vec_id")))
-        .where(pair_cos >= threshold)
-        .select(loser.alias("vec_id"))
+        _pair_join(withd, "vec_id", ["cid"], pair_cos.alias("_cos"),
+                   loser.alias("_loser"))
+        .where(F.col("_cos") >= threshold)
+        .select(F.col("_loser").alias("vec_id"))
         .distinct()
         .withColumn("_dup", F.lit(True)))
     return (

@@ -9,8 +9,6 @@ with Spark-free host controls (the ab_curation.py protocol):
   exact       — dedup_exact on the scrubbed corpus
   lsh         — dedup_minhash_lsh pairs on the scrubbed corpus
   clusters    — dedup_clusters (LSH + the CC loop)
-  clusters-nojump — clusters with the pointer-jump shortcut off
-  full-nojump — curate_web with pointer_jump disabled via monkeypatch
 
 Usage: python3 tools/ab_curate_web.py [sf_dir] [trials] [arm ...]
 Output: one JSON line per (arm, mode).
@@ -75,9 +73,6 @@ def main() -> None:
             docs2, threshold=0.30, max_shingle_df="auto"),
         "clusters": lambda: D.dedup_clusters(
             docs2, threshold=0.30, max_shingle_df="auto"),
-        "clusters-nojump": lambda: D.dedup_clusters(
-            docs2, threshold=0.30, max_shingle_df="auto",
-            pointer_jump=False),
     }
     if only:
         arms = {k: v for k, v in arms.items() if k in only}

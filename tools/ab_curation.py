@@ -6,7 +6,6 @@ Arms, each wall-clocked with Spark-free host controls before/after:
 
   curation   — the full curation_pipeline query (curation.curate)
   clusters   — dedup_clusters alone (the r4-changed inner loop)
-  clusters-nojump — dedup_clusters with the pointer-jump shortcut off
 
 Each arm runs `trials` times twice: COLD (clearCache + JVM gc before
 every trial) and WARM (no cache hygiene between trials — the resident
@@ -56,10 +55,6 @@ def main() -> None:
         "clusters": lambda: D.dedup_clusters(
             raw, threshold=0.30, max_shingle_df="auto"),
     }
-    if "pointer_jump" in D.dedup_clusters.__code__.co_varnames:
-        arms["clusters-nojump"] = lambda: D.dedup_clusters(
-            raw, threshold=0.30, max_shingle_df="auto",
-            pointer_jump=False)
 
     for name, fn in arms.items():
         for mode in ("cold", "warm"):

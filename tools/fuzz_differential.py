@@ -3,6 +3,11 @@ Python kernel AND the reference parser (Node), asserting identical tree
 dumps and toHtml output.  Usage:
 
     python3 tools/fuzz_differential.py [n_cases] [seed]
+
+Reference-only: needs Node and the reference checkout that
+tools/ref_dump.mjs imports; without it ref_dump.mjs exits 1 and this
+tool fails.  The committed goldens (tests/test_goldens.py) are the
+kernel pins that run everywhere.
 """
 
 from __future__ import annotations

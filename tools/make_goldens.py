@@ -2,6 +2,10 @@
 (via tools/ref_dump.mjs under Node) over tools/fixture_corpus.py.
 
 Run once per corpus change:  python3 tools/make_goldens.py
+
+Reference-only: needs Node and the reference checkout that
+tools/ref_dump.mjs imports; without it ref_dump.mjs exits 1 and this
+tool fails (the committed fixtures/goldens.jsonl stays the pin).
 """
 
 from __future__ import annotations

@@ -62,9 +62,10 @@ AUDITS: list[tuple[str, str, list[str], list[str]]] = [
     ("embedding_srp_lsh",
      "SRP-LSH candidates banded on (vec_id, band, key) ONLY — the "
      "64-float embedding never crosses the band exchange (checked "
-     "below: no Generate/explode operator outputs an embedding "
-     "column); pairs are distinct'd (HashAggregate) BEFORE one "
-     "cosine per pair (VERDICT r2 'What's wrong' item 1)",
+     "below: neither the band explode (Generate) nor the scan of its "
+     "checkpoint (Scan ExistingRDD) outputs an embedding column); "
+     "pairs are distinct'd (HashAggregate) BEFORE one cosine per pair "
+     "(VERDICT r2 'What's wrong' item 1)",
      ["HashAggregate"], []),
     ("sim_topk",
      "TakeOrderedAndProject (no global sort shuffle)",
@@ -301,13 +302,38 @@ def _skeleton(plan: str) -> str:
     return "\n".join(out)
 
 
-def main() -> None:
+def plan_session():
+    """The session every audit runs in (pytest reuses it)."""
     from simple_html_parser_spark.runtime.session import get_spark
 
+    return get_spark("plans", master="local[4]", shuffle_partitions=8)
+
+
+def audit(spark, name: str) -> tuple[str, list[str]]:
+    """(formatted plan, failure messages) of the ``AUDITS`` entry
+    ``name`` built at ``SF``."""
     import __spark_entry__ as entry
 
-    spark = get_spark("plans", master="local[4]", shuffle_partitions=8)
-    qs = entry.queries()
+    _, _, must, must_not = next(a for a in AUDITS if a[0] == name)
+    df = entry.queries()[name](spark, SF)
+    plan = (df._jdf.queryExecution().explainString(
+        spark._jvm.org.apache.spark.sql.execution.ExplainMode
+        .fromString("formatted")))
+    failures = [f"missing {s!r}" for s in must if s not in plan]
+    failures += [f"contains {s!r}" for s in must_not if s in plan]
+    if name == "embedding_srp_lsh":
+        # the banded frame — its explode (Generate) or, once
+        # checkpointed, its RDD scan — must not carry the embedding
+        for chunk in re.split(r"\n\(\d+\) ", plan):
+            if (chunk.startswith(("Generate", "Scan ExistingRDD"))
+                    and "embedding" in chunk):
+                failures.append(
+                    "embedding column crosses the band explode")
+    return plan, failures
+
+
+def main() -> None:
+    spark = plan_session()
     parts = ["""# Physical plan audit
 
 `df.explain("formatted")` for the headline queries at sf0.01
@@ -319,28 +345,13 @@ pipeline has exactly one Python stage, and dedup_minhash_lsh contains
 NO all-pairs shingle self-join (LeftSemi candidate prune instead).
 """]
     failures = 0
-    for name, audit, must, must_not in AUDITS:
-        df = qs[name](spark, SF)
-        plan = (df._jdf.queryExecution().explainString(
-            spark._jvm.org.apache.spark.sql.execution.ExplainMode
-            .fromString("formatted")))
-        for s in must:
-            if s not in plan:
-                print(f"AUDIT FAIL {name}: missing {s!r}")
-                failures += 1
-        for s in must_not:
-            if s in plan:
-                print(f"AUDIT FAIL {name}: contains {s!r}")
-                failures += 1
-        if name == "embedding_srp_lsh":
-            # the banded explode must not carry the embedding payload
-            for chunk in re.split(r"\n\(\d+\) ", plan):
-                if chunk.startswith("Generate") and "embedding" in chunk:
-                    print(f"AUDIT FAIL {name}: embedding column "
-                          f"crosses the band explode")
-                    failures += 1
+    for name, note, _, _ in AUDITS:
+        plan, failed = audit(spark, name)
+        for msg in failed:
+            print(f"AUDIT FAIL {name}: {msg}")
+        failures += len(failed)
         schemas = sorted(set(re.findall(r"ReadSchema: \S+", plan)))
-        parts.append(f"## {name}\n\n*Audit:* {audit}\n\n```\n"
+        parts.append(f"## {name}\n\n*Audit:* {note}\n\n```\n"
                      f"{_skeleton(plan)}\n```\n\n```\n"
                      + "\n".join(schemas) + "\n```\n")
         print(f"ok  {name}")
