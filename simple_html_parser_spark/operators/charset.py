@@ -9,15 +9,12 @@ shape as the extraction hot path — no per-row Python anywhere.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import pyarrow as pa
 from pyspark.sql import DataFrame
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from ..kernel.charset import decode_html
-
-DETECT_SCHEMA = ("url string, encoding string, enc_source string, "
-                 "n_chars bigint")
+from .extraction import Columns, _arrow_stage
 
 _PA = pa.schema([
     ("url", pa.string()), ("encoding", pa.string()),
@@ -25,26 +22,17 @@ _PA = pa.schema([
 ])
 
 
-def _detect_fn(
-        batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-    for batch in batches:
-        urls = batch.column("url").to_pylist()
-        payloads = batch.column("payload").to_pylist()
-        cols = {name: [] for name in _PA.names}
-        for url, raw in zip(urls, payloads):
-            try:
-                text, enc, src = decode_html(bytes(raw or b""))
-            except Exception as e:  # noqa: BLE001 — per-doc isolation
-                text, enc, src = "", f"error:{type(e).__name__}", "error"
-            cols["url"].append(url)
-            cols["encoding"].append(enc)
-            cols["enc_source"].append(src)
-            cols["n_chars"].append(len(text))
-        if cols["url"]:
-            yield pa.RecordBatch.from_pydict(
-                {k: pa.array(v, type=_PA.field(k).type)
-                 for k, v in cols.items()},
-                schema=_PA)
+def _detect_rows(url, raw) -> Columns:
+    text, enc, src = decode_html(bytes(raw or b""))
+    return [url], [enc], [src], [len(text)]
+
+
+def _detect_error(url, raw, e: Exception) -> Columns:
+    return [url], [f"error:{type(e).__name__}"], ["error"], [0]
+
+
+_detect_fn = _arrow_stage(_PA, _detect_rows, _detect_error,
+                          payload="payload")
 
 
 def detect_charset(df: DataFrame, col: str = "payload") -> DataFrame:
@@ -52,5 +40,5 @@ def detect_charset(df: DataFrame, col: str = "payload") -> DataFrame:
     BOM / meta-prescan / default sniff plus the decoded length —
     n_chars proves the DECODE (not just the label) is right, since a
     UTF-16 page decoded as UTF-8 yields a very different length."""
-    return (df.selectExpr(f"url", f"{col} as payload")
-            .mapInArrow(_detect_fn, DETECT_SCHEMA))
+    return (df.selectExpr("url", f"{col} as payload")
+            .mapInArrow(_detect_fn, from_arrow_schema(_PA)))

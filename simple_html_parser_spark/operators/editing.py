@@ -16,14 +16,14 @@ per url without executing any of it.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import pyarrow as pa
 from pyspark.sql import DataFrame
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from ..kernel.compat import _run_mutation
-from ..kernel.tokenizer import parse_html
-from .extraction import MAX_NODES_PER_DOC, _decode
+from .extraction import (
+    Columns, _arrow_stage, _digest_error, _digest_row, _parse,
+)
 
 # One step per op family; order chosen so moves happen before removes.
 # A2 set / A4 update / A3 remove attribute; M6 replaceWith (new node =
@@ -49,41 +49,22 @@ EDIT_STEPS: tuple[dict, ...] = (
     {"act": "remove", "sel": "footer", "index": 0},
 )
 
-EDIT_SCHEMA = "url string, ed_len bigint, ed_sha256 string, error string"
-
 _PA_EDIT = pa.schema([
     ("url", pa.string()), ("ed_len", pa.int64()),
     ("ed_sha256", pa.string()), ("error", pa.string()),
 ])
 
 
-def _edit_fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-    import hashlib
-    for batch in batches:
-        urls = batch.column("url").to_pylist()
-        htmls = batch.column("html").to_pylist()
-        cols = {name: [] for name in _PA_EDIT.names}
-        for url, raw in zip(urls, htmls):
-            cols["url"].append(url)
-            try:
-                t = parse_html(_decode(raw), max_nodes=MAX_NODES_PER_DOC)
-                out = _run_mutation(t, list(EDIT_STEPS))["html"] \
-                    .encode("utf-8")
-                cols["ed_len"].append(len(out))
-                cols["ed_sha256"].append(hashlib.sha256(out).hexdigest())
-                cols["error"].append(None)
-            except Exception as e:  # noqa: BLE001 — per-doc isolation
-                cols["ed_len"].append(0)
-                cols["ed_sha256"].append(None)
-                cols["error"].append(f"{type(e).__name__}: {e}")
-        if cols["url"]:
-            yield pa.RecordBatch.from_pydict(
-                {k: pa.array(v, type=_PA_EDIT.field(k).type)
-                 for k, v in cols.items()},
-                schema=_PA_EDIT)
+def _edit_rows(url, raw) -> Columns:
+    out = _run_mutation(_parse(raw), list(EDIT_STEPS))["html"]
+    return _digest_row(url, out.encode("utf-8"))
+
+
+_edit_fn = _arrow_stage(_PA_EDIT, _edit_rows, _digest_error)
 
 
 def edit_roundtrip(df: DataFrame) -> DataFrame:
     """documents(url, html) → (url, ed_len, ed_sha256): sha256+length
     of to_html after applying EDIT_STEPS."""
-    return df.select("url", "html").mapInArrow(_edit_fn, EDIT_SCHEMA)
+    return df.select("url", "html").mapInArrow(_edit_fn,
+                                               from_arrow_schema(_PA_EDIT))

@@ -8,51 +8,26 @@ Design (SURVEY.md §3.4, §4.3):
         JVM↔Python boundary on the hot path; no per-row Python UDFs
       → columnar output batches, byte-capped
 
-Scale notes:
-- Input batches are bounded by spark.sql.execution.arrow.maxRecordsPerBatch;
-  output batches are flushed by BYTES (EXTRACT_FLUSH_BYTES) so one batch
-  of giant pages cannot balloon executor memory.
-- Every document is wrapped in try/except: a pathological page yields an
-  error row instead of failing the task (at 10^12 docs, tail pages WILL
-  be pathological).
-- The kernel is iterative (no recursion) except CSS serialization;
-  RecursionError is caught per-document.
+Every per-document Python stage of the engine (here, editing, queryapi,
+charset, warc) is built by ``_arrow_stage``: the stage supplies its
+per-document work and its error row, the helper owns the batch loop.
 """
 
 from __future__ import annotations
 
+import hashlib
 import time
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator, Sequence
 
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from ..kernel.charset import decode_html
 from ..kernel.extract import MAIN_CONTENT, PARITY, ExtractionProfile, extract
+from ..kernel.serialize import to_html
 from ..kernel.tokenizer import DEFAULT_SPECIAL_TAGS, parse_html
-
-EXTRACT_SCHEMA = (
-    "url string, extracted_text string, "
-    "spans array<struct<start:int,end:int>>, "
-    "n_nodes int, n_text_nodes int, n_bytes bigint, "
-    "parse_ms double, error string"
-)
-
-_PA_SPANS = pa.list_(pa.struct([("start", pa.int32()), ("end", pa.int32())]))
-_PA_SCHEMA = pa.schema([
-    ("url", pa.string()),
-    ("extracted_text", pa.string()),
-    ("spans", _PA_SPANS),
-    ("n_nodes", pa.int32()),
-    ("n_text_nodes", pa.int32()),
-    ("n_bytes", pa.int64()),
-    ("parse_ms", pa.float64()),
-    ("error", pa.string()),
-])
-
-# Flush output batches when accumulated text exceeds this many bytes.
-EXTRACT_FLUSH_BYTES = 32 * 1024 * 1024
 
 
 def _decode(b) -> str:
@@ -77,66 +52,129 @@ def _decode_sniffed(b, _decode_html=decode_html) -> str:
 # pathological pages; a capped doc becomes an error row, not an OOM)
 MAX_NODES_PER_DOC = 5_000_000
 
+# Flush an output batch once the input bytes consumed since the last
+# flush reach this many.
+FLUSH_BYTES = 32 * 1024 * 1024
+
+# One document's rows: one sequence per output column, in schema order.
+Columns = Sequence[Sequence]
+
+
+def _errmsg(e: BaseException) -> str:
+    return f"{type(e).__name__}: {e}"
+
+
+def _arrow_stage(schema: pa.Schema,
+                 doc_rows: Callable[[object, object], Columns],
+                 error_row: Callable[[object, object, Exception], Columns],
+                 key: str = "url", payload: str = "html"):
+    """The mapInArrow function of a per-document Python stage over
+    ``(key, payload)`` input batches.  ``doc_rows(key, payload)``
+    returns the document's rows as one tuple of fully built column
+    sequences (no generators); if it raises, the document contributes
+    ``error_row(key, payload, exc)`` instead — never a partial set.
+
+    Scale notes:
+    - Per-document isolation: every document runs inside try/except,
+      so a pathological page yields its error row instead of failing
+      the task (at 10^12 docs, tail pages WILL be pathological).  The
+      kernel is iterative (no recursion) except CSS serialization;
+      RecursionError is caught here too.
+    - Bounded batches: input batches are bounded by
+      spark.sql.execution.arrow.maxRecordsPerBatch; output is flushed
+      at the end of every input batch, and earlier once the input
+      bytes consumed since the last flush reach ``FLUSH_BYTES``, so one
+      batch of giant pages cannot balloon executor memory."""
+    names = schema.names
+    types = [schema.field(n).type for n in names]
+
+    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        cols: list[list] = [[] for _ in names]
+        consumed = 0
+
+        def flush() -> pa.RecordBatch:
+            nonlocal cols, consumed
+            out = pa.RecordBatch.from_pydict(
+                {n: pa.array(c, type=t)
+                 for n, c, t in zip(names, cols, types)},
+                schema=schema)
+            cols, consumed = [[] for _ in names], 0
+            return out
+
+        for batch in batches:
+            for k, raw in zip(batch.column(key).to_pylist(),
+                              batch.column(payload).to_pylist()):
+                try:
+                    doc = doc_rows(k, raw)
+                except Exception as e:  # noqa: BLE001 — per-doc isolation
+                    doc = error_row(k, raw, e)
+                for col, values in zip(cols, doc):
+                    col.extend(values)
+                consumed += len(raw) if raw is not None else 0
+                if consumed >= FLUSH_BYTES and cols[0]:
+                    yield flush()
+            if cols[0]:
+                yield flush()
+
+    return fn
+
+
+def _parse(raw):
+    """The default per-document parse: utf-8 decode, node-capped."""
+    return parse_html(_decode(raw), max_nodes=MAX_NODES_PER_DOC)
+
+
+def _keyed(key, rows: list[tuple]) -> Columns:
+    """One document's row tuples (key column omitted) → its columns."""
+    return ([key] * len(rows), *zip(*rows))
+
+
+def _digest_row(url, out: bytes) -> Columns:
+    return [url], [len(out)], [hashlib.sha256(out).hexdigest()], [None]
+
+
+def _digest_error(url, raw, e: Exception) -> Columns:
+    return [url], [0], [None], [_errmsg(e)]
+
+
+_PA_SPANS = pa.list_(pa.struct([("start", pa.int32()), ("end", pa.int32())]))
+_PA_SCHEMA = pa.schema([
+    ("url", pa.string()),
+    ("extracted_text", pa.string()),
+    ("spans", _PA_SPANS),
+    ("n_nodes", pa.int32()),
+    ("n_text_nodes", pa.int32()),
+    ("n_bytes", pa.int64()),
+    ("parse_ms", pa.float64()),
+    ("error", pa.string()),
+])
+
 
 def _make_extract_fn(profile: ExtractionProfile,
                      sniff_charset: bool = False):
     decode = _decode_sniffed if sniff_charset else _decode
+    # parse start of the current document: parse_ms on an error row is
+    # the time from parse start to the failure, as on a success row
+    started = [0.0]
 
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        cols = {name: [] for name in _PA_SCHEMA.names}
-        acc_bytes = 0
+    def doc_rows(url, raw) -> Columns:
+        html = decode(raw)
+        started[0] = t0 = time.perf_counter()
+        res = extract(parse_html(html, max_nodes=MAX_NODES_PER_DOC), profile)
+        ms = (time.perf_counter() - t0) * 1e3
+        # res.spans is already a list of (start, end) tuples and pyarrow
+        # builds struct arrays from tuples directly — no per-span dicts
+        # (80+ spans/page on the text-heavy bench corpus)
+        return ([url], [res.text], [res.spans], [res.n_nodes],
+                [res.n_text_nodes], [len(raw) if raw is not None else 0],
+                [ms], [None])
 
-        def flush():
-            nonlocal cols, acc_bytes
-            out = pa.RecordBatch.from_pydict(
-                {k: pa.array(v, type=_PA_SCHEMA.field(k).type)
-                 for k, v in cols.items()},
-                schema=_PA_SCHEMA)
-            cols = {name: [] for name in _PA_SCHEMA.names}
-            acc_bytes = 0
-            return out
+    def error_row(url, raw, e: Exception) -> Columns:
+        ms = (time.perf_counter() - started[0]) * 1e3
+        return ([url], [""], [[]], [0], [0],
+                [len(raw) if raw is not None else 0], [ms], [_errmsg(e)])
 
-        for batch in batches:
-            urls = batch.column("url").to_pylist()
-            htmls = batch.column("html").to_pylist()
-            for url, raw in zip(urls, htmls):
-                html = decode(raw)
-                n_bytes = len(raw) if raw is not None else 0
-                t0 = time.perf_counter()
-                try:
-                    tree = parse_html(html, max_nodes=MAX_NODES_PER_DOC)
-                    res = extract(tree, profile)
-                    ms = (time.perf_counter() - t0) * 1e3
-                    cols["url"].append(url)
-                    cols["extracted_text"].append(res.text)
-                    # res.spans is already a list of (start, end)
-                    # tuples and pyarrow builds struct arrays from
-                    # tuples directly — the per-span dict conversion
-                    # was pure allocation overhead (80+ spans/page on
-                    # the text-heavy bench corpus)
-                    cols["spans"].append(res.spans)
-                    cols["n_nodes"].append(res.n_nodes)
-                    cols["n_text_nodes"].append(res.n_text_nodes)
-                    cols["n_bytes"].append(n_bytes)
-                    cols["parse_ms"].append(ms)
-                    cols["error"].append(None)
-                    acc_bytes += len(res.text) + n_bytes // 8
-                except Exception as e:  # noqa: BLE001 — per-doc isolation
-                    ms = (time.perf_counter() - t0) * 1e3
-                    cols["url"].append(url)
-                    cols["extracted_text"].append("")
-                    cols["spans"].append([])
-                    cols["n_nodes"].append(0)
-                    cols["n_text_nodes"].append(0)
-                    cols["n_bytes"].append(n_bytes)
-                    cols["parse_ms"].append(ms)
-                    cols["error"].append(f"{type(e).__name__}: {e}")
-                if acc_bytes >= EXTRACT_FLUSH_BYTES:
-                    yield flush()
-        if cols["url"]:
-            yield flush()
-
-    return fn
+    return _arrow_stage(_PA_SCHEMA, doc_rows, error_row)
 
 
 def extract_documents(
@@ -158,7 +196,7 @@ def extract_documents(
         pruned = pruned.repartition(salt_partitions, F.xxhash64("url"))
     return pruned.mapInArrow(
         _make_extract_fn(profile, sniff_charset=sniff_charset),
-        EXTRACT_SCHEMA)
+        from_arrow_schema(_PA_SCHEMA))
 
 
 def extract_main_content(df: DataFrame, **kw) -> DataFrame:
@@ -167,39 +205,17 @@ def extract_main_content(df: DataFrame, **kw) -> DataFrame:
 
 # ---- serialization round-trip ------------------------------------------------
 
-ROUNDTRIP_SCHEMA = "url string, rt_len bigint, rt_sha256 string, error string"
-
 _PA_RT = pa.schema([
     ("url", pa.string()), ("rt_len", pa.int64()),
     ("rt_sha256", pa.string()), ("error", pa.string()),
 ])
 
 
-def _roundtrip_fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-    import hashlib
+def _roundtrip_rows(url, raw) -> Columns:
+    return _digest_row(url, to_html(_parse(raw)).encode("utf-8"))
 
-    from ..kernel.serialize import to_html
-    for batch in batches:
-        urls = batch.column("url").to_pylist()
-        htmls = batch.column("html").to_pylist()
-        cols = {name: [] for name in _PA_RT.names}
-        for url, raw in zip(urls, htmls):
-            cols["url"].append(url)
-            try:
-                t = parse_html(_decode(raw), max_nodes=MAX_NODES_PER_DOC)
-                out = to_html(t).encode("utf-8")
-                cols["rt_len"].append(len(out))
-                cols["rt_sha256"].append(hashlib.sha256(out).hexdigest())
-                cols["error"].append(None)
-            except Exception as e:  # noqa: BLE001 — per-doc isolation
-                cols["rt_len"].append(0)
-                cols["rt_sha256"].append(None)
-                cols["error"].append(f"{type(e).__name__}: {e}")
-        if cols["url"]:
-            yield pa.RecordBatch.from_pydict(
-                {k: pa.array(v, type=_PA_RT.field(k).type)
-                 for k, v in cols.items()},
-                schema=_PA_RT)
+
+_roundtrip_fn = _arrow_stage(_PA_RT, _roundtrip_rows, _digest_error)
 
 
 def roundtrip_html(df: DataFrame) -> DataFrame:
@@ -210,19 +226,10 @@ def roundtrip_html(df: DataFrame) -> DataFrame:
     round-trip cases; for jhp pages the serialized form is itself a
     fixed template, see sources.documents.TPL_SPECIAL_SERIALIZED)."""
     return df.select("url", "html").mapInArrow(_roundtrip_fn,
-                                               ROUNDTRIP_SCHEMA)
+                                               from_arrow_schema(_PA_RT))
 
 
 # ---- exploded nodes view ----------------------------------------------------
-
-NODES_SCHEMA = (
-    "url string, node_id int, parent_id int, subtree_end int, "
-    "bfs_rank int, depth int, type string, name string, "
-    "attrs map<string,string>, content string, comment_type string, "
-    "style_block boolean, script_block boolean, css_selector string, "
-    "css_name string, css_params string, "
-    "css_declarations map<string,string>, src_start int, src_end int"
-)
 
 _PA_NODES = pa.schema([
     ("url", pa.string()), ("node_id", pa.int32()),
@@ -259,111 +266,83 @@ def _sparse_list(sc, n: int) -> list:
     return out
 
 
+def _bfs_rank(t, n: int) -> list[int]:
+    rank = [0] * n
+    for r, nid in enumerate(t.bfs_order(0)):
+        rank[nid] = r
+    return rank
+
+
+def _depth(t, n: int) -> list[int]:
+    depth = [0] * n
+    parent = t.parent
+    for nid in range(1, n):
+        depth[nid] = depth[parent[nid]] + 1
+    return depth
+
+
+def _items(dicts) -> list:
+    return [list(d.items()) if d is not None else None for d in dicts]
+
+
+# COLUMNAR emission: the FlatTree already is struct-of-arrays, so each
+# requested column is one C-level list extend (or a single
+# comprehension) instead of 19 per-node appends — and unrequested
+# columns (incl. the per-doc BFS/depth Python passes) are never
+# computed.  Measured r6: full emission 0.46s CPU for 200k nodes
+# row-at-a-time vs per-column extends; callers that prune (e.g.
+# nodes_type_counts needs only `type`) skip both the build and the
+# Arrow transport of 19-column rows.  Each builder maps (tree, n) to
+# the column's n values; `url` is filled in by the stage.
+_NODE_COLUMNS = {
+    "node_id": lambda t, n: range(n),
+    "parent_id": lambda t, n: t.parent,
+    "subtree_end": lambda t, n: t.subtree_end(),
+    "bfs_rank": _bfs_rank,
+    "depth": _depth,
+    "type": lambda t, n: t.type,
+    "name": lambda t, n: t.name,
+    "attrs": lambda t, n: _items(t.attrs),
+    "content": lambda t, n: t.content,
+    "comment_type": lambda t, n: _sparse_list(t.comment_type, n),
+    "style_block": lambda t, n: [(f & 1) != 0 for f in t.flags],
+    "script_block": lambda t, n: [(f & 2) != 0 for f in t.flags],
+    "css_selector": lambda t, n: _sparse_list(t.css_selector, n),
+    "css_name": lambda t, n: _sparse_list(t.css_name, n),
+    "css_params": lambda t, n: _sparse_list(t.css_params, n),
+    "css_declarations": lambda t, n: _items(_sparse_list(t.css_decls, n)),
+    "src_start": lambda t, n: t.src_start,
+    "src_end": lambda t, n: t.src_end,
+}
+
+
+def _nodes_schema(columns: list[str] | None) -> pa.Schema:
+    if columns is None:
+        return _PA_NODES
+    unknown = [c for c in columns if c not in _PA_NODES.names]
+    if unknown:
+        raise ValueError(f"unknown node columns: {unknown}")
+    return pa.schema([_PA_NODES.field(c) for c in columns])
+
+
 def _make_nodes_fn(max_nodes: int,
                    special_tags: tuple[str, ...] | None = None,
                    columns: list[str] | None = None):
     special = (tuple(special_tags) if special_tags is not None
                else DEFAULT_SPECIAL_TAGS)
-    names = list(_PA_NODES.names) if columns is None else list(columns)
-    schema = pa.schema([_PA_NODES.field(c) for c in names])
-    need = set(names)
+    schema = _nodes_schema(columns)
 
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            urls = batch.column("url").to_pylist()
-            htmls = batch.column("html").to_pylist()
-            cols = {name: [] for name in names}
-            for url, raw in zip(urls, htmls):
-                try:
-                    t = parse_html(_decode(raw), special,
-                                   max_nodes=max_nodes)
-                except Exception as e:  # noqa: BLE001 — per-doc isolation
-                    for k in names:
-                        cols[k].append(
-                            url if k == "url"
-                            else f"{type(e).__name__}: {e}"
-                            if k == "content" else _ERROR_ROW[k])
-                    continue
-                # COLUMNAR emission: the FlatTree already is
-                # struct-of-arrays, so each requested column is one
-                # C-level list extend (or a single comprehension)
-                # instead of 19 per-node appends — and unrequested
-                # columns (incl. the per-doc BFS/depth Python passes)
-                # are never computed.  Measured r6: full emission
-                # 0.46s CPU for 200k nodes row-at-a-time vs
-                # per-column extends; callers that prune (e.g.
-                # nodes_type_counts needs only `type`) skip both the
-                # build and the Arrow transport of 19-column rows.
-                n = len(t.type)
-                if "url" in need:
-                    cols["url"].extend([url] * n)
-                if "node_id" in need:
-                    cols["node_id"].extend(range(n))
-                if "parent_id" in need:
-                    cols["parent_id"].extend(t.parent)
-                if "subtree_end" in need:
-                    cols["subtree_end"].extend(t.subtree_end())
-                if "bfs_rank" in need:
-                    bfs_rank = [0] * n
-                    for rank, nid in enumerate(t.bfs_order(0)):
-                        bfs_rank[nid] = rank
-                    cols["bfs_rank"].extend(bfs_rank)
-                if "depth" in need:
-                    depth = [0] * n
-                    parent = t.parent
-                    for nid in range(1, n):
-                        depth[nid] = depth[parent[nid]] + 1
-                    cols["depth"].extend(depth)
-                if "type" in need:
-                    cols["type"].extend(t.type)
-                if "name" in need:
-                    cols["name"].extend(t.name)
-                if "attrs" in need:
-                    cols["attrs"].extend(
-                        list(a.items()) if a is not None else None
-                        for a in t.attrs)
-                if "content" in need:
-                    cols["content"].extend(t.content)
-                if "comment_type" in need:
-                    cols["comment_type"].extend(
-                        _sparse_list(t.comment_type, n))
-                if "style_block" in need:
-                    cols["style_block"].extend(
-                        (f & 1) != 0 for f in t.flags)
-                if "script_block" in need:
-                    cols["script_block"].extend(
-                        (f & 2) != 0 for f in t.flags)
-                if "css_selector" in need:
-                    cols["css_selector"].extend(
-                        _sparse_list(t.css_selector, n))
-                if "css_name" in need:
-                    cols["css_name"].extend(_sparse_list(t.css_name, n))
-                if "css_params" in need:
-                    cols["css_params"].extend(
-                        _sparse_list(t.css_params, n))
-                if "css_declarations" in need:
-                    cols["css_declarations"].extend(
-                        list(d.items()) if d is not None else None
-                        for d in _sparse_list(t.css_decls, n))
-                if "src_start" in need:
-                    cols["src_start"].extend(t.src_start)
-                if "src_end" in need:
-                    cols["src_end"].extend(t.src_end)
-            if cols[names[0]]:
-                yield pa.RecordBatch.from_pydict(
-                    {k: pa.array(v, type=schema.field(k).type)
-                     for k, v in cols.items()},
-                    schema=schema)
+    def doc_rows(url, raw) -> Columns:
+        t = parse_html(_decode(raw), special, max_nodes=max_nodes)
+        n = len(t.type)
+        return tuple([url] * n if c == "url" else _NODE_COLUMNS[c](t, n)
+                     for c in schema.names)
 
-    return fn
+    def error_row(url, raw, e: Exception) -> Columns:
+        row = {**_ERROR_ROW, "url": url, "content": _errmsg(e)}
+        return tuple([row[c]] for c in schema.names)
 
-
-# per-column DDL (split-safe: no NODES_SCHEMA type contains ', ')
-_NODES_DDL = {
-    s.strip().split(" ", 1)[0]: s.strip()
-    for s in NODES_SCHEMA.split(", ")
-}
-assert list(_NODES_DDL) == list(_PA_NODES.names), _NODES_DDL
+    return _arrow_stage(schema, doc_rows, error_row)
 
 
 def parse_nodes(df: DataFrame, salt_partitions: int | None = None,
@@ -380,8 +359,8 @@ def parse_nodes(df: DataFrame, salt_partitions: int | None = None,
     builder; default ('jhp', 's_').
 
     ``columns`` prunes the EMITTED node view to the listed subset (in
-    NODES_SCHEMA order recommended): Catalyst's column pruning cannot
-    see into the Python stage, so an opaque mapInArrow otherwise
+    node-view column order recommended): Catalyst's column pruning
+    cannot see into the Python stage, so an opaque mapInArrow otherwise
     builds and ships all 19 columns — including the per-document
     BFS-rank and depth passes — for a query that reads one of them
     (guide §4: pass only the columns the function needs; here the
@@ -390,12 +369,6 @@ def parse_nodes(df: DataFrame, salt_partitions: int | None = None,
     pruned = df.select("url", "html")
     if salt_partitions:
         pruned = pruned.repartition(salt_partitions, F.xxhash64("url"))
-    if columns is None:
-        schema = NODES_SCHEMA
-    else:
-        unknown = [c for c in columns if c not in _NODES_DDL]
-        if unknown:
-            raise ValueError(f"unknown node columns: {unknown}")
-        schema = ", ".join(_NODES_DDL[c] for c in columns)
     return pruned.mapInArrow(
-        _make_nodes_fn(max_nodes, special_tags, columns), schema)
+        _make_nodes_fn(max_nodes, special_tags, columns),
+        from_arrow_schema(_nodes_schema(columns)))

@@ -22,6 +22,10 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# Rows per decoded chunk: mapInPandas input batches are re-chunked so
+# a batch of giant blobs cannot blow a decoder batch.
+BATCH_ROWS = 256
+
 PNG_SIG = b"\x89PNG\r\n\x1a\n"
 # PNG color type → sample channels (spec §11.2.2; type 3 is palette)
 _PNG_CHANNELS = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}
@@ -74,15 +78,13 @@ def decode_image_batch(payloads: pd.Series) -> pd.DataFrame:
                        "decoded": "bool"})
 
 
-def extract_image_features(
-    df: DataFrame, col: str = "html", batch_rows: int = 256,
-) -> DataFrame:
+def extract_image_features(df: DataFrame, col: str = "html") -> DataFrame:
     """mapInPandas pipeline over binary payloads — Arrow-batched, with
     explicit batch re-chunking so giant blobs can't blow a batch."""
     def fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
-            for start in range(0, len(pdf), batch_rows):
-                chunk = pdf.iloc[start:start + batch_rows]
+            for start in range(0, len(pdf), BATCH_ROWS):
+                chunk = pdf.iloc[start:start + BATCH_ROWS]
                 feats = decode_image_batch(chunk[col])
                 feats.insert(0, "url", chunk["url"].values)
                 yield feats
@@ -140,14 +142,12 @@ def decode_audio_batch(payloads: pd.Series) -> pd.DataFrame:
                        "duration_ms": "int64", "decoded": "bool"})
 
 
-def extract_audio_features(
-    df: DataFrame, col: str = "html", batch_rows: int = 256,
-) -> DataFrame:
+def extract_audio_features(df: DataFrame, col: str = "html") -> DataFrame:
     """Same Arrow-batched mapInPandas shape as the image path."""
     def fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
-            for start in range(0, len(pdf), batch_rows):
-                chunk = pdf.iloc[start:start + batch_rows]
+            for start in range(0, len(pdf), BATCH_ROWS):
+                chunk = pdf.iloc[start:start + BATCH_ROWS]
                 feats = decode_audio_batch(chunk[col])
                 feats.insert(0, "url", chunk["url"].values)
                 yield feats

@@ -43,6 +43,8 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from .multimodal import BATCH_ROWS
+
 PDF_TEXT_SCHEMA = (
     "url string, page int, n_lines int, n_chars int, text string, "
     "decoded boolean, note string"
@@ -420,9 +422,7 @@ def decode_pdf_batch(urls: pd.Series, payloads: pd.Series) -> pd.DataFrame:
                        "n_chars": "int32", "decoded": "bool"})
 
 
-def extract_pdf_text(
-    df: DataFrame, col: str = "payload", batch_rows: int = 256,
-) -> DataFrame:
+def extract_pdf_text(df: DataFrame, col: str = "payload") -> DataFrame:
     """Arrow-batched mapInPandas over binary PDF payloads — same
     re-chunked shape as the image/audio paths (multimodal.py), one
     Python stage, no per-row UDFs.  Output is one row per PAGE, so a
@@ -430,8 +430,8 @@ def extract_pdf_text(
     strings."""
     def fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
-            for start in range(0, len(pdf), batch_rows):
-                chunk = pdf.iloc[start:start + batch_rows]
+            for start in range(0, len(pdf), BATCH_ROWS):
+                chunk = pdf.iloc[start:start + BATCH_ROWS]
                 yield decode_pdf_batch(chunk["url"], chunk[col])
 
     return df.select("url", col).mapInPandas(fn, PDF_TEXT_SCHEMA)

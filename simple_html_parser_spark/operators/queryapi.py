@@ -11,14 +11,13 @@ are reference-verified by the query-api / cssy golden cases.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import pyarrow as pa
 from pyspark.sql import DataFrame
+from pyspark.sql.pandas.types import from_arrow_schema
 
-from ..kernel import cssquery, selector
-from ..kernel.tokenizer import parse_html
-from .extraction import MAX_NODES_PER_DOC, _decode
+from ..kernel import cssquery, selector, serialize
+from ..kernel.manipulate import DomIterator
+from .extraction import Columns, _arrow_stage, _errmsg, _keyed, _parse
 
 # (op, arg) — executed in order per document on the MAIN template.
 QUERY_OPS: tuple[tuple[str, str], ...] = (
@@ -42,8 +41,6 @@ QUERY_OPS: tuple[tuple[str, str], ...] = (
     ("comments_no_type", ""),
     ("comments_bare", ""),
 )
-
-QUERY_SCHEMA = "url string, op string, arg string, ids string"
 
 _PA_Q = pa.schema([
     ("url", pa.string()), ("op", pa.string()),
@@ -80,44 +77,37 @@ def _run_query_op(t, op: str, arg: str) -> list[int] | list[str]:
     raise ValueError(op)
 
 
-def _query_fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-    for batch in batches:
-        urls = batch.column("url").to_pylist()
-        htmls = batch.column("html").to_pylist()
-        cols = {name: [] for name in _PA_Q.names}
-        for url, raw in zip(urls, htmls):
-            # per-doc isolation: one unparseable / over-max_nodes page
-            # yields a marker row (op='error'), never a failed task —
-            # at 10^12 docs the tail WILL contain such pages.
-            try:
-                t = parse_html(_decode(raw), max_nodes=MAX_NODES_PER_DOC)
-                for op, arg in QUERY_OPS:
-                    cols["url"].append(url)
-                    cols["op"].append(op)
-                    cols["arg"].append(arg)
-                    cols["ids"].append(
-                        ",".join(str(i) for i in _run_query_op(t, op, arg)))
-            except Exception as e:  # noqa: BLE001 — per-doc isolation
-                cols["url"].append(url)
-                cols["op"].append("error")
-                cols["arg"].append(f"{type(e).__name__}: {e}")
-                cols["ids"].append("")
-        if cols["url"]:
-            yield pa.RecordBatch.from_pydict(
-                {k: pa.array(v, type=_PA_Q.field(k).type)
-                 for k, v in cols.items()},
-                schema=_PA_Q)
+def _ids(ids) -> str:
+    return ",".join(map(str, ids))
+
+
+def _marker_error(url, raw, e: Exception) -> Columns:
+    """One (url, 'error', message) marker row."""
+    return [url], ["error"], [_errmsg(e)]
+
+
+def _query_rows(url, raw) -> Columns:
+    t = _parse(raw)
+    return _keyed(url, [(op, arg, _ids(_run_query_op(t, op, arg)))
+                        for op, arg in QUERY_OPS])
+
+
+# an unparseable / over-max_nodes page yields one marker row
+# (op='error', arg=message) — at 10^12 docs the tail WILL contain such
+# pages.
+_query_fn = _arrow_stage(
+    _PA_Q, _query_rows,
+    lambda url, raw, e: ([url], ["error"], [_errmsg(e)], [""]))
 
 
 def kernel_query_api(df: DataFrame) -> DataFrame:
     """documents(url, html) → one row per (url, query op): matched
     node ids, comma-joined in engine order."""
-    return df.select("url", "html").mapInArrow(_query_fn, QUERY_SCHEMA)
+    return df.select("url", "html").mapInArrow(_query_fn,
+                                               from_arrow_schema(_PA_Q))
 
 
 # ---- iterator surface (Q1) ---------------------------------------------------
-
-ITER_SCHEMA = "url string, op string, ids string"
 
 _PA_I = pa.schema([
     ("url", pa.string()), ("op", pa.string()), ("ids", pa.string()),
@@ -141,10 +131,8 @@ ITER_OPS = ("walk", "skip_noop", "rm_current_p", "rm_current_img",
             "rm_other")
 
 
-def _run_iter_op(html: str, op: str) -> list[int]:
-    from ..kernel import selector as sel
-    from ..kernel.manipulate import DomIterator
-    t = parse_html(html, max_nodes=MAX_NODES_PER_DOC)
+def _run_iter_op(raw, op: str) -> list[int]:
+    t = _parse(raw)
     it = DomIterator(t, 0)
     ids: list[int] = []
     for n in it:
@@ -157,46 +145,29 @@ def _run_iter_op(html: str, op: str) -> list[int]:
         elif op == "rm_current_img" and ty == "tag-open" and nm == "img":
             it.remove(n)
         elif op == "rm_other" and ty == "tag-open" and nm == "br/":
-            tgt = sel.query_selector(t, 0, "hr")
+            tgt = selector.query_selector(t, 0, "hr")
             if tgt is not None:
                 it.remove(tgt)
     return ids
 
 
-def _iter_fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-    for batch in batches:
-        urls = batch.column("url").to_pylist()
-        htmls = batch.column("html").to_pylist()
-        cols = {name: [] for name in _PA_I.names}
-        for url, raw in zip(urls, htmls):
-            try:
-                html = _decode(raw)
-                for op in ITER_OPS:
-                    cols["url"].append(url)
-                    cols["op"].append(op)
-                    cols["ids"].append(",".join(
-                        str(i) for i in _run_iter_op(html, op)))
-            except Exception as e:  # noqa: BLE001 — per-doc isolation
-                cols["url"].append(url)
-                cols["op"].append("error")
-                cols["ids"].append(f"{type(e).__name__}: {e}")
-        if cols["url"]:
-            yield pa.RecordBatch.from_pydict(
-                {k: pa.array(v, type=_PA_I.field(k).type)
-                 for k, v in cols.items()},
-                schema=_PA_I)
+def _iter_rows(url, raw) -> Columns:
+    return _keyed(url, [(op, _ids(_run_iter_op(raw, op)))
+                        for op in ITER_OPS])
+
+
+_iter_fn = _arrow_stage(_PA_I, _iter_rows, _marker_error)
 
 
 def iterator_api(df: DataFrame) -> DataFrame:
     """documents(url, html) → one row per (url, iterator op): visited
     node ids in engine order (Q1 — removal-safe DFS iterator with the
     reference's skipChildren/css-root/termination quirks)."""
-    return df.select("url", "html").mapInArrow(_iter_fn, ITER_SCHEMA)
+    return df.select("url", "html").mapInArrow(_iter_fn,
+                                               from_arrow_schema(_PA_I))
 
 
 # ---- CSS query surface -------------------------------------------------------
-
-CSSQ_SCHEMA = "url string, kind string, name string, value string"
 
 _PA_C = pa.schema([
     ("url", pa.string()), ("kind", pa.string()),
@@ -204,53 +175,34 @@ _PA_C = pa.schema([
 ])
 
 
-def _cssq_fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-    for batch in batches:
-        urls = batch.column("url").to_pylist()
-        htmls = batch.column("html").to_pylist()
-        cols = {name: [] for name in _PA_C.names}
+def _cssq_rows(url, raw) -> Columns:
+    t = _parse(raw)
+    rows = [("at_rule", t.css_name[nid], t.css_params[nid] or "")
+            for nid in cssquery.css_find_at_rules(t, 0)]
+    for sel in (".a", ".d"):
+        rows.append(("rules_compound", sel,
+                     _ids(cssquery.css_find_rules(t, 0, sel))))
+        rows.append(("rules_exact", sel,
+                     _ids(cssquery.css_find_rules(t, 0, sel,
+                                                  include_compound=False))))
+    rows += [("var:" + v["scope"], v["name"], v["value"])
+             for v in cssquery.css_find_variables(t, 0)]
+    return _keyed(url, rows)
 
-        def emit(url, kind, name, value):
-            cols["url"].append(url)
-            cols["kind"].append(kind)
-            cols["name"].append(name)
-            cols["value"].append(value)
 
-        for url, raw in zip(urls, htmls):
-            try:
-                t = parse_html(_decode(raw), max_nodes=MAX_NODES_PER_DOC)
-            except Exception as e:  # noqa: BLE001 — per-doc isolation
-                emit(url, "error", type(e).__name__, str(e))
-                continue
-            for nid in cssquery.css_find_at_rules(t, 0):
-                emit(url, "at_rule", t.css_name[nid],
-                     t.css_params[nid] or "")
-            for sel in (".a", ".d"):
-                ids = cssquery.css_find_rules(t, 0, sel)
-                emit(url, "rules_compound", sel,
-                     ",".join(str(i) for i in ids))
-                ids = cssquery.css_find_rules(t, 0, sel,
-                                              include_compound=False)
-                emit(url, "rules_exact", sel,
-                     ",".join(str(i) for i in ids))
-            for v in cssquery.css_find_variables(t, 0):
-                emit(url, "var:" + v["scope"], v["name"], v["value"])
-        if cols["url"]:
-            yield pa.RecordBatch.from_pydict(
-                {k: pa.array(v, type=_PA_C.field(k).type)
-                 for k, v in cols.items()},
-                schema=_PA_C)
+_cssq_fn = _arrow_stage(
+    _PA_C, _cssq_rows,
+    lambda url, raw, e: ([url], ["error"], [type(e).__name__], [str(e)]))
 
 
 def css_query_api(df: DataFrame) -> DataFrame:
     """documents(url, html) → cssFindAtRules / cssFindRules (compound
     AND exact) / cssFindVariables results as flat rows."""
-    return df.select("url", "html").mapInArrow(_cssq_fn, CSSQ_SCHEMA)
+    return df.select("url", "html").mapInArrow(_cssq_fn,
+                                               from_arrow_schema(_PA_C))
 
 
 # ---- serialization API surface ------------------------------------------------
-
-SER_SCHEMA = "url string, kind string, out string"
 
 _PA_S = pa.schema([
     ("url", pa.string()), ("kind", pa.string()), ("out", pa.string()),
@@ -262,47 +214,31 @@ _PA_S = pa.schema([
 _SER_MAIN_NODE = 21
 
 
-def _ser_fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-    from ..kernel import serialize
-    for batch in batches:
-        urls = batch.column("url").to_pylist()
-        htmls = batch.column("html").to_pylist()
-        cols = {name: [] for name in _PA_S.names}
-        for url, raw in zip(urls, htmls):
-            try:
-                t = parse_html(_decode(raw), max_nodes=MAX_NODES_PER_DOC)
-                # guard the pinned main-node id against non-template
-                # inputs (short trees / node 21 not a tag-open)
-                if _SER_MAIN_NODE >= len(t) or \
-                        t.name[_SER_MAIN_NODE] != "main":
-                    raise ValueError(
-                        f"doc does not match the main template "
-                        f"(len={len(t)}) — serialize_api targets the "
-                        f"fixed corpus")
-                rows = (
-                    ("get_tag", serialize.get_tag(t, _SER_MAIN_NODE)),
-                    ("inner_html", serialize.inner_html(t, _SER_MAIN_NODE)),
-                    ("outer_html", serialize.outer_html(t, _SER_MAIN_NODE)),
-                    ("to_string", serialize.to_string(t, 0)),
-                )
-            except Exception as e:  # noqa: BLE001 — per-doc isolation
-                rows = (("error", f"{type(e).__name__}: {e}"),)
-            for kind, out in rows:
-                cols["url"].append(url)
-                cols["kind"].append(kind)
-                cols["out"].append(out)
-        if cols["url"]:
-            yield pa.RecordBatch.from_pydict(
-                {k: pa.array(v, type=_PA_S.field(k).type)
-                 for k, v in cols.items()},
-                schema=_PA_S)
+def _ser_rows(url, raw) -> Columns:
+    t = _parse(raw)
+    # guard the pinned main-node id against non-template inputs (short
+    # trees / node 21 not a tag-open)
+    if _SER_MAIN_NODE >= len(t) or t.name[_SER_MAIN_NODE] != "main":
+        raise ValueError(
+            f"doc does not match the main template (len={len(t)}) — "
+            f"serialize_api targets the fixed corpus")
+    return _keyed(url, [
+        ("get_tag", serialize.get_tag(t, _SER_MAIN_NODE)),
+        ("inner_html", serialize.inner_html(t, _SER_MAIN_NODE)),
+        ("outer_html", serialize.outer_html(t, _SER_MAIN_NODE)),
+        ("to_string", serialize.to_string(t, 0)),
+    ])
+
+
+_ser_fn = _arrow_stage(_PA_S, _ser_rows, _marker_error)
 
 
 def serialize_api(df: DataFrame) -> DataFrame:
     """documents(url, html) → getTag / innerHtml / outerHtml on the
     main node + toString of the whole document, as raw strings (all
     closed-form on the fixed template)."""
-    return df.select("url", "html").mapInArrow(_ser_fn, SER_SCHEMA)
+    return df.select("url", "html").mapInArrow(_ser_fn,
+                                               from_arrow_schema(_PA_S))
 
 
 # ---- cssToString option matrix (C12) -----------------------------------------
@@ -321,73 +257,41 @@ CSS_SER_COMBOS: tuple[tuple[str, dict], ...] = (
     ("comments", {"includeComments": True}),
 )
 
-CSS_SER_SCHEMA = "url string, combo string, out string"
-
 _PA_CS = pa.schema([
     ("url", pa.string()), ("combo", pa.string()), ("out", pa.string()),
 ])
 
 
-def _css_ser_fn(
-        batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-    from ..kernel import serialize
-    for batch in batches:
-        urls = batch.column("url").to_pylist()
-        htmls = batch.column("html").to_pylist()
-        cols = {name: [] for name in _PA_CS.names}
-        for url, raw in zip(urls, htmls):
-            try:
-                t = parse_html(_decode(raw), max_nodes=MAX_NODES_PER_DOC)
-                rows = [(combo, serialize.css_to_string(t, **opts))
-                        for combo, opts in CSS_SER_COMBOS]
-            except Exception as e:  # noqa: BLE001 — per-doc isolation
-                rows = [("error", f"{type(e).__name__}: {e}")]
-            for combo, out in rows:
-                cols["url"].append(url)
-                cols["combo"].append(combo)
-                cols["out"].append(out)
-        if cols["url"]:
-            yield pa.RecordBatch.from_pydict(
-                {k: pa.array(v, type=_PA_CS.field(k).type)
-                 for k, v in cols.items()},
-                schema=_PA_CS)
+def _css_ser_rows(url, raw) -> Columns:
+    t = _parse(raw)
+    return _keyed(url, [(combo, serialize.css_to_string(t, **opts))
+                        for combo, opts in CSS_SER_COMBOS])
+
+
+_css_ser_fn = _arrow_stage(_PA_CS, _css_ser_rows, _marker_error)
 
 
 def css_serialize_api(df: DataFrame) -> DataFrame:
     """documents(url, html) → cssToString output under each
     CSS_SER_COMBOS option set (the full single-line / flatten /
     combine / braces / indent matrix), one row per (url, combo)."""
-    return df.select("url", "html").mapInArrow(_css_ser_fn, CSS_SER_SCHEMA)
+    return df.select("url", "html").mapInArrow(
+        _css_ser_fn, from_arrow_schema(_PA_CS))
 
 
-VIZ_SCHEMA = "url string, viz string"
+# ---- visualize (S6) ----------------------------------------------------------
 
 _PA_V = pa.schema([("url", pa.string()), ("viz", pa.string())])
 
 
-def _viz_fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-    from ..kernel import serialize
-    for batch in batches:
-        urls = batch.column("url").to_pylist()
-        htmls = batch.column("html").to_pylist()
-        cols = {"url": [], "viz": []}
-        for url, raw in zip(urls, htmls):
-            try:
-                t = parse_html(_decode(raw), max_nodes=MAX_NODES_PER_DOC)
-                viz = serialize.visualize(t)
-            except Exception as e:  # noqa: BLE001 — per-doc isolation
-                viz = f"ERROR {type(e).__name__}: {e}"
-            cols["url"].append(url)
-            cols["viz"].append(viz)
-        if cols["url"]:
-            yield pa.RecordBatch.from_pydict(
-                {k: pa.array(v, type=_PA_V.field(k).type)
-                 for k, v in cols.items()},
-                schema=_PA_V)
+_viz_fn = _arrow_stage(
+    _PA_V, lambda url, raw: ([url], [serialize.visualize(_parse(raw))]),
+    lambda url, raw, e: ([url], [f"ERROR {_errmsg(e)}"]))
 
 
 def visualize_api(df: DataFrame) -> DataFrame:
     """documents(url, html) → visualize(root) per url (S6) — on the
     fixed template the whole box-drawing dump is closed-form
     (sources.documents.TPL_MAIN_VISUALIZE)."""
-    return df.select("url", "html").mapInArrow(_viz_fn, VIZ_SCHEMA)
+    return df.select("url", "html").mapInArrow(_viz_fn,
+                                               from_arrow_schema(_PA_V))

@@ -24,15 +24,13 @@ from collections.abc import Iterator
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 
-from .extraction import extract_documents
+from .extraction import Columns, _arrow_stage, _errmsg, _keyed, \
+    extract_documents
 
 _MAGIC = b"WARC/1.0\r\n"
 _HDR_END = b"\r\n\r\n"
-
-WARC_SCHEMA = ("warc_id string, rec_idx int, target_uri string, "
-               "warc_date string, content_length bigint, html binary, "
-               "error string")
 
 _PA_WARC = pa.schema([
     ("warc_id", pa.string()), ("rec_idx", pa.int32()),
@@ -42,25 +40,22 @@ _PA_WARC = pa.schema([
 ])
 
 
-def _parse_one(warc_id: str, payload: bytes, cols: dict) -> None:
-    def emit(idx, uri=None, date=None, clen=None, html=None, err=None):
-        cols["warc_id"].append(warc_id)
-        cols["rec_idx"].append(idx)
-        cols["target_uri"].append(uri)
-        cols["warc_date"].append(date)
-        cols["content_length"].append(clen)
-        cols["html"].append(html)
-        cols["error"].append(err)
+def _bad(idx: int, err: str) -> tuple:
+    return idx, None, None, None, None, err
 
+
+def _records(payload: bytes) -> Iterator[tuple]:
+    """(rec_idx, target_uri, warc_date, content_length, html, error)
+    per record; a malformed tail ends the file with one error row."""
     pos, idx = 0, 0
     n = len(payload)
     while pos < n:
         if not payload.startswith(_MAGIC, pos):
-            emit(idx, err=f"bad magic at byte {pos}")
+            yield _bad(idx, f"bad magic at byte {pos}")
             return
         hdr_end = payload.find(_HDR_END, pos)
         if hdr_end < 0:
-            emit(idx, err="unterminated header block")
+            yield _bad(idx, "unterminated header block")
             return
         # ISO 28500: field names are case-insensitive, whitespace after
         # the colon is optional — lowercase keys, lstrip values
@@ -73,35 +68,37 @@ def _parse_one(warc_id: str, payload: bytes, cols: dict) -> None:
         try:
             clen = int(headers["content-length"])
         except (KeyError, ValueError):
-            emit(idx, err="missing/invalid Content-Length")
+            yield _bad(idx, "missing/invalid Content-Length")
             return
         if clen < 0:
             # a negative length would move pos BACKWARD and loop the
             # parser forever on the same record — adversarial input,
             # not a tolerable quirk
-            emit(idx, err="negative Content-Length")
+            yield _bad(idx, "negative Content-Length")
             return
         body_start = hdr_end + len(_HDR_END)
         if body_start + clen > n:
-            emit(idx, err="truncated body")
+            yield _bad(idx, "truncated body")
             return
-        emit(idx, headers.get("warc-target-uri"),
-             headers.get("warc-date"), clen,
-             payload[body_start:body_start + clen])
+        yield (idx, headers.get("warc-target-uri"),
+               headers.get("warc-date"), clen,
+               payload[body_start:body_start + clen], None)
         idx += 1
         pos = body_start + clen
         if payload.startswith(b"\r\n\r\n", pos):
             pos += 4
 
 
-def _parse_fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-    for batch in batches:
-        ids = batch.column("warc_id").to_pylist()
-        payloads = batch.column("payload").to_pylist()
-        cols: dict = {name: [] for name in _PA_WARC.names}
-        for wid, pay in zip(ids, payloads):
-            _parse_one(wid, pay if pay is not None else b"", cols)
-        yield pa.RecordBatch.from_pydict(cols, schema=_PA_WARC)
+def _parse_rows(warc_id, payload) -> Columns:
+    return _keyed(warc_id, list(_records(payload or b"")))
+
+
+def _parse_error(warc_id, payload, e: Exception) -> Columns:
+    return _keyed(warc_id, [_bad(0, _errmsg(e))])
+
+
+_parse_fn = _arrow_stage(_PA_WARC, _parse_rows, _parse_error,
+                         key="warc_id", payload="payload")
 
 
 def parse_warc(files: DataFrame) -> DataFrame:
@@ -109,7 +106,7 @@ def parse_warc(files: DataFrame) -> DataFrame:
     (warc_id, rec_idx, target_uri, warc_date, content_length, html,
     error)."""
     return (files.select("warc_id", "payload")
-            .mapInArrow(_parse_fn, WARC_SCHEMA))
+            .mapInArrow(_parse_fn, from_arrow_schema(_PA_WARC)))
 
 
 def warc_extract(files: DataFrame, **kw) -> DataFrame:

@@ -20,6 +20,9 @@ from pyspark.sql.types import (
 from ..kernel.extract import PARITY, ExtractionProfile
 from ..operators.extraction import extract_documents
 
+# Files per micro-batch of the crawl file-source streams.
+FILES_PER_TRIGGER = 8
+
 CRAWL_SCHEMA = StructType([
     StructField("url", StringType()),
     StructField("warc_ts", TimestampType()),
@@ -41,7 +44,7 @@ def stream_extract(
     Returns the StreamingQuery (caller awaits termination)."""
     stream = (
         spark.readStream.schema(CRAWL_SCHEMA)
-        .option("maxFilesPerTrigger", "8")
+        .option("maxFilesPerTrigger", FILES_PER_TRIGGER)
         .parquet(input_dir)
     )
     extracted = extract_documents(stream, profile=profile)
@@ -77,7 +80,7 @@ def stream_windowed_metrics(
 
     stream = (
         spark.readStream.schema(CRAWL_SCHEMA)
-        .option("maxFilesPerTrigger", "8")
+        .option("maxFilesPerTrigger", FILES_PER_TRIGGER)
         .parquet(input_dir)
     )
     agg = (
@@ -100,6 +103,42 @@ def stream_windowed_metrics(
     )
 
 
+def _sentinel_snapshot(spark: SparkSession, docs, run, prefix: str):
+    """Stream a bounded crawl frame through ``run(input_dir,
+    output_dir, checkpoint_dir)`` (a watermarked append-mode
+    aggregation) and return its sink as a batch DataFrame.
+
+    Append mode emits a window only when the WATERMARK passes its end;
+    availableNow does not force-finalize.  A sentinel row 30 days past
+    the corpus advances the watermark beyond every real window, so the
+    emitted set is exactly the batch aggregation over ``docs`` —
+    deterministic, so plain SQL can oracle it.  The sentinel's own
+    window stays open and never appears.
+
+    Order is what makes it deterministic.  The file source orders
+    files by modification time, and micro-batch N drops rows older
+    than the watermark set by micro-batch N-2.  So (1) the corpus is
+    written as at most FILES_PER_TRIGGER files, one micro-batch, and
+    streamed to completion; (2) only then is the sentinel appended and
+    streamed as a second availableNow pass on the same checkpoint.  If
+    the sentinel shared a write with the corpus, any corpus file whose
+    modification time sorts after the sentinel's would lose its rows
+    behind the watermark."""
+    import tempfile
+
+    from pyspark.sql import functions as F
+
+    base = tempfile.mkdtemp(prefix=prefix)
+    inp, outp, chk = f"{base}/in", f"{base}/out", f"{base}/chk"
+    docs.coalesce(FILES_PER_TRIGGER).write.parquet(inp)
+    run(inp, outp, chk).awaitTermination()
+    docs.limit(1).withColumn(
+        "warc_ts", F.col("warc_ts") + F.expr("INTERVAL 30 DAYS")
+    ).write.mode("append").parquet(inp)
+    run(inp, outp, chk).awaitTermination()
+    return spark.read.parquet(outp)
+
+
 def windowed_metrics_snapshot(
     spark: SparkSession,
     docs,
@@ -108,35 +147,21 @@ def windowed_metrics_snapshot(
 ):
     """Run the windowed-metrics STREAM over a bounded crawl frame and
     return the emitted windows as a batch DataFrame — the driver-oracle
-    harness for the streaming surface (VERDICT r2 item 7).
-
-    Append mode emits a window only when the WATERMARK passes its end;
-    availableNow does not force-finalize.  A sentinel row 30 days past
-    the corpus advances the watermark beyond every real window, so the
-    emitted set is exactly the tumbling-window GROUP BY over the input
-    — deterministic, so plain SQL can oracle it.  The sentinel's own
-    window stays open and never appears."""
-    import tempfile
-
+    harness for the streaming surface (VERDICT r2 item 7); the
+    sentinel-watermark mechanics are in ``_sentinel_snapshot``."""
     from pyspark.sql import functions as F
 
-    base = tempfile.mkdtemp(prefix="shp_stream_wm_")
-    inp, outp, chk = f"{base}/in", f"{base}/out", f"{base}/chk"
-    sentinel = docs.limit(1).withColumn(
-        "warc_ts", F.col("warc_ts") + F.expr("INTERVAL 30 DAYS"))
-    docs.unionByName(sentinel).write.parquet(inp)
-    q = stream_windowed_metrics(spark, inp, outp, chk,
-                                window=window, watermark=watermark)
-    q.awaitTermination()
-    return (
-        spark.read.parquet(outp)
-        .select(
-            F.date_format("window_start", "yyyy-MM-dd HH:mm:ss")
-            .alias("window_start"),
-            F.date_format("window_end", "yyyy-MM-dd HH:mm:ss")
-            .alias("window_end"),
-            "n_docs", "html_bytes")
-    )
+    out = _sentinel_snapshot(
+        spark, docs,
+        lambda inp, outp, chk: stream_windowed_metrics(
+            spark, inp, outp, chk, window=window, watermark=watermark),
+        "shp_stream_wm_")
+    return out.select(
+        F.date_format("window_start", "yyyy-MM-dd HH:mm:ss")
+        .alias("window_start"),
+        F.date_format("window_end", "yyyy-MM-dd HH:mm:ss")
+        .alias("window_end"),
+        "n_docs", "html_bytes")
 
 
 def stream_sessionize(
@@ -162,7 +187,7 @@ def stream_sessionize(
 
     stream = (
         spark.readStream.schema(CRAWL_SCHEMA)
-        .option("maxFilesPerTrigger", "8")
+        .option("maxFilesPerTrigger", FILES_PER_TRIGGER)
         .parquet(input_dir)
     )
     host = F.regexp_extract("url", r"^[a-z][a-z0-9+.\-]*://([^/]+)", 1)
@@ -196,34 +221,26 @@ def sessionize_snapshot(
 ):
     """Run the session-window STREAM over a bounded crawl frame and
     return the emitted sessions as a batch DataFrame (the same
-    sentinel-watermark harness as windowed_metrics_snapshot: one row
-    30 days past the corpus finalizes every real session; the
-    sentinel's own session stays open and never appears).  Callers
+    sentinel-watermark harness as windowed_metrics_snapshot,
+    ``_sentinel_snapshot``: the sentinel finalizes every real session;
+    its own session stays open and never appears).  Callers
     must feed timestamps whose in-host gaps are clearly below or
     above ``gap`` — the exactly-equal-to-gap boundary is the one case
     where engines' open/closed conventions could differ."""
-    import tempfile
-
     from pyspark.sql import functions as F
 
-    base = tempfile.mkdtemp(prefix="shp_stream_sess_")
-    inp, outp, chk = f"{base}/in", f"{base}/out", f"{base}/chk"
-    sentinel = docs.limit(1).withColumn(
-        "warc_ts", F.col("warc_ts") + F.expr("INTERVAL 30 DAYS"))
-    docs.unionByName(sentinel).write.parquet(inp)
-    q = stream_sessionize(spark, inp, outp, chk,
-                          gap=gap, watermark=watermark)
-    q.awaitTermination()
-    return (
-        spark.read.parquet(outp)
-        .select(
-            "host",
-            F.date_format("session_start", "yyyy-MM-dd HH:mm:ss")
-            .alias("session_start"),
-            F.date_format("session_end", "yyyy-MM-dd HH:mm:ss")
-            .alias("session_end"),
-            "n_docs", "html_bytes")
-    )
+    out = _sentinel_snapshot(
+        spark, docs,
+        lambda inp, outp, chk: stream_sessionize(
+            spark, inp, outp, chk, gap=gap, watermark=watermark),
+        "shp_stream_sess_")
+    return out.select(
+        "host",
+        F.date_format("session_start", "yyyy-MM-dd HH:mm:ss")
+        .alias("session_start"),
+        F.date_format("session_end", "yyyy-MM-dd HH:mm:ss")
+        .alias("session_end"),
+        "n_docs", "html_bytes")
 
 
 def first_seen_snapshot(spark: SparkSession, docs):

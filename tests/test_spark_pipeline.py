@@ -271,6 +271,53 @@ def test_streaming_windowed_metrics(spark, docs, tmp_path):
     assert got == {"00:00": 60, "00:01": 60}
 
 
+def test_windowed_metrics_snapshot_sentinel_file_first(
+        spark, docs, monkeypatch):
+    """The snapshot equals the batch tumbling-window GROUP BY even when
+    the sentinel's file sorts FIRST in the file source's
+    modification-time order.  Streamed in the same pass as a
+    multi-micro-batch corpus, the sentinel's watermark would drop
+    every corpus row of the micro-batches after the next one."""
+    import glob
+    import os
+
+    import pyarrow.parquet as pq
+
+    from simple_html_parser_spark.runtime import streaming
+
+    real = streaming.stream_windowed_metrics
+
+    def sentinel_first(spark_, input_dir, *args, **kw):
+        parts = glob.glob(f"{input_dir}/*.parquet")
+        top = {p: max(pq.read_table(p, columns=["warc_ts"])
+                      .column("warc_ts").to_pylist()) for p in parts}
+        floor = min(top.values())
+        sentinel = [p for p, ts in top.items()
+                    if (ts - floor).days >= 29]
+        if sentinel:
+            first = min(os.path.getmtime(p) for p in parts) - 10
+            for p in sentinel:
+                os.utime(p, (first, first))
+        return real(spark_, input_dir, *args, **kw)
+
+    monkeypatch.setattr(streaming, "stream_windowed_metrics",
+                        sentinel_first)
+    # 24 corpus files: more than two micro-batches of 8 files hold
+    frame = docs.repartition(24)
+    got = {tuple(r) for r in
+           streaming.windowed_metrics_snapshot(spark, frame).collect()}
+    batch = (
+        frame.groupBy(F.window("warc_ts", "1 minute").alias("w"))
+        .agg(F.count("*").alias("n_docs"),
+             F.sum(F.octet_length("html")).alias("html_bytes"))
+        .select(F.date_format("w.start", "yyyy-MM-dd HH:mm:ss"),
+                F.date_format("w.end", "yyyy-MM-dd HH:mm:ss"),
+                "n_docs", "html_bytes")
+    )
+    assert got == {tuple(r) for r in batch.collect()}
+    assert len(got) > 1
+
+
 def test_streaming_sessionize_matches_batch(spark, docs):
     """The streamed session windows must equal the BATCH
     session_window aggregation over the same frame — Spark's own

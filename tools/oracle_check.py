@@ -41,6 +41,50 @@ def _norm_rows(cols, rows):
     return [cols[i] for i in order], out
 
 
+def _check_one(con, spark, name, fn, oracles, sf_dir, t0) -> bool:
+    """Run one query and compare it with its oracle; True on failure."""
+    try:
+        df = fn(spark, sf_dir)
+        spark_cols = df.columns
+        spark_rows = [tuple(r) for r in df.collect()]
+    except Exception as e:  # noqa: BLE001
+        print(f"FAIL {name}: spark error {e}")
+        return True
+    finally:
+        # several operators persist intermediates (LSH shingles,
+        # line-dedup segments); 73 queries in one session would
+        # accrete cached blocks and degrade later queries (the
+        # r3 bench hygiene lesson) — release between queries
+        spark.catalog.clearCache()
+    if name not in oracles:
+        print(f"rows-only {name}: {len(spark_rows)} rows "
+              f"({time.time()-t0:.1f}s)")
+        return False
+    try:
+        rel = con.sql(oracles[name])
+        duck_cols = [c.lower() for c in rel.columns]
+        duck_rows = rel.fetchall()
+    except Exception as e:  # noqa: BLE001
+        print(f"FAIL {name}: duckdb error {e}")
+        return True
+    sc, srows = _norm_rows([c.lower() for c in spark_cols], spark_rows)
+    dc, drows = _norm_rows(duck_cols, duck_rows)
+    if sc != dc:
+        print(f"FAIL {name}: columns {sc} vs {dc}")
+        return True
+    if len(srows) != len(drows):
+        print(f"FAIL {name}: rowcount {len(srows)} vs {len(drows)}")
+        print(f"  spark[:2]={srows[:2]}\n  duck[:2]={drows[:2]}")
+        return True
+    bad = [(a, b) for a, b in zip(srows, drows) if a != b]
+    if bad:
+        print(f"FAIL {name}: {len(bad)}/{len(srows)} rows differ; "
+              f"first: \n  spark={bad[0][0]}\n  duck ={bad[0][1]}")
+        return True
+    print(f"ok  {name}: {len(srows)} rows ({time.time()-t0:.1f}s)")
+    return False
+
+
 def check(sf_dir: str, only: list[str] | None = None) -> int:
     con = duckdb.connect()
     for t in TABLES:
@@ -52,55 +96,17 @@ def check(sf_dir: str, only: list[str] | None = None) -> int:
     queries = entrymod.queries()
     oracles = entrymod.oracle_sql()
     failures = 0
+    seconds: dict[str, float] = {}
     for name, fn in queries.items():
         if only and name not in only:
             continue
         t0 = time.time()
-        try:
-            df = fn(spark, sf_dir)
-            spark_cols = df.columns
-            spark_rows = [tuple(r) for r in df.collect()]
-        except Exception as e:  # noqa: BLE001
-            print(f"FAIL {name}: spark error {e}")
-            failures += 1
-            continue
-        finally:
-            # several operators persist intermediates (LSH shingles,
-            # line-dedup segments); 73 queries in one session would
-            # accrete cached blocks and degrade later queries (the
-            # r3 bench hygiene lesson) — release between queries
-            spark.catalog.clearCache()
-        if name not in oracles:
-            print(f"rows-only {name}: {len(spark_rows)} rows "
-                  f"({time.time()-t0:.1f}s)")
-            continue
-        try:
-            rel = con.sql(oracles[name])
-            duck_cols = [c.lower() for c in rel.columns]
-            duck_rows = rel.fetchall()
-        except Exception as e:  # noqa: BLE001
-            print(f"FAIL {name}: duckdb error {e}")
-            failures += 1
-            continue
-        sc, srows = _norm_rows([c.lower() for c in spark_cols], spark_rows)
-        dc, drows = _norm_rows(duck_cols, duck_rows)
-        if sc != dc:
-            print(f"FAIL {name}: columns {sc} vs {dc}")
-            failures += 1
-            continue
-        if len(srows) != len(drows):
-            print(f"FAIL {name}: rowcount {len(srows)} vs {len(drows)}")
-            print(f"  spark[:2]={srows[:2]}\n  duck[:2]={drows[:2]}")
-            failures += 1
-            continue
-        bad = [(a, b) for a, b in zip(srows, drows) if a != b]
-        if bad:
-            print(f"FAIL {name}: {len(bad)}/{len(srows)} rows differ; "
-                  f"first: \n  spark={bad[0][0]}\n  duck ={bad[0][1]}")
-            failures += 1
-            continue
-        print(f"ok  {name}: {len(srows)} rows ({time.time()-t0:.1f}s)")
+        failures += _check_one(con, spark, name, fn, oracles, sf_dir, t0)
+        seconds[name] = time.time() - t0
     spark.stop()
+    print("slowest queries (s):")
+    for name in sorted(seconds, key=seconds.get, reverse=True)[:10]:
+        print(f"  {seconds[name]:7.1f}  {name}")
     print("FAILURES:", failures)
     return failures
 
