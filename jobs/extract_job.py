@@ -1,5 +1,6 @@
 """Production extraction job — the spark-submit entry point.
 
+    python3 tools/package_pyfiles.py   # builds the zip from the source
     spark-submit --py-files dist/simple_html_parser_spark.zip \\
         jobs/extract_job.py \\
         --input /path/to/crawl_table --output /path/to/extracted \\

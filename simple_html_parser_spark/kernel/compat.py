@@ -38,7 +38,9 @@ def run_op(tree: FlatTree, op: dict):
     ctx = op.get("ctx", 0)
     name = op["op"]
     if name == "mutate":
-        return _run_mutation(tree, op["steps"])
+        res = _run_mutation(tree, op["steps"])
+        res["html_comments"] = serialize.to_html(tree, 0, True)
+        return res
     if name == "iterate":
         return _run_iterate(tree, op.get("remove"), op.get("remove_other"))
     if name == "visualize":
@@ -173,14 +175,19 @@ def run_case(case: dict) -> dict:
 
 
 def _resolve_sel(tree: FlatTree, sel: str, index: int | None):
-    matches = selector.query_selector_all(tree, 0, sel)
     idx = index or 0
+    matches = selector.query_selector_all(tree, 0, sel, limit=idx + 1)
     if idx >= len(matches):
         raise ValueError(f"no match for {sel}[{idx}]")
     return matches[idx]
 
 
 def _run_mutation(tree: FlatTree, steps: list[dict]) -> dict:
+    """Apply ``steps`` to ``tree`` and return ``{"html": to_html}`` of
+    the edited tree (comments dropped).  The edit stage reads only that
+    key; run_op("mutate") adds the with-comments serialization itself.
+    selector and serialize are looked up as module attributes so a
+    tracer that swaps them times each layer."""
     from . import manipulate as M
     for st in steps:
         target = _resolve_sel(tree, st["sel"], st.get("index")) \
@@ -247,10 +254,7 @@ def _run_mutation(tree: FlatTree, steps: list[dict]) -> dict:
                                       st["value"], st.get("sep", " "))
         else:
             raise ValueError(f"unknown act {act}")
-    return {
-        "html": serialize.to_html(tree, 0, False),
-        "html_comments": serialize.to_html(tree, 0, True),
-    }
+    return {"html": serialize.to_html(tree, 0, False)}
 
 
 def _node_label(tree: FlatTree, nid: int) -> str:

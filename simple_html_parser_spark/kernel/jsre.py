@@ -112,10 +112,13 @@ def js_entries(d: dict) -> list[tuple[str, object]]:
     """``Object.entries`` enumeration order: array-index keys first in
     ascending numeric order, then string keys in insertion order.
     Matters for attribute/declaration serialization when a key like
-    '39' appears (e.g. ``<tag 39=x a=y>`` serializes 39 first)."""
-    idx = []
-    rest = []
-    for k in d:
-        (idx if _is_array_index(k) else rest).append(k)
+    '39' appears (e.g. ``<tag 39=x a=y>`` serializes 39 first).  Only a
+    key starting with an ASCII digit can be an array index, so only
+    those are probed (``str.isdigit`` would also admit '²' or '١')."""
+    idx = [k for k in d if k[:1] in _ASCII_DIGITS and _is_array_index(k)]
+    if not idx:
+        return list(d.items())
     idx.sort(key=int)
-    return [(k, d[k]) for k in idx] + [(k, d[k]) for k in rest]
+    first = set(idx)
+    return [(k, d[k]) for k in idx] \
+        + [(k, v) for k, v in d.items() if k not in first]

@@ -23,7 +23,6 @@ Pinned reference behaviors:
 from __future__ import annotations
 
 import re
-from collections import deque
 
 from .jsre import js_split_ws, js_trim
 from .tree import COMMENT, TAG_OPEN, FlatTree
@@ -41,9 +40,11 @@ RAW_VALUE = re.compile(r"^[\"'](.*)[\"']$")
 
 
 def execute_basic_selector(
-    tree: FlatTree, ctx: int, selector: str
+    tree: FlatTree, ctx: int, selector: str, limit: int | None = None
 ) -> list[int]:
-    """#executeBasicSelector (node.js:910-1030)."""
+    """#executeBasicSelector (node.js:910-1030).  A simple selector
+    stops its walk once it has ``limit`` matches; the descendant form
+    always evaluates in full."""
     # Descendant selector: recursive ancestor→subtree with dedup
     # (node.js:947-969). NOTE: checked on the RAW selector string with a
     # literal ``includes(' ')`` in JS — only U+0020 triggers it.
@@ -85,10 +86,10 @@ def execute_basic_selector(
     attrs_col = tree.attrs
     ttype = tree.type
     tname = tree.name
-    q = deque([ctx])
-    while q:
-        nid = q.popleft()
-        if ttype[nid] == TAG_OPEN:
+    for level in tree.bfs_levels(ctx):
+        for nid in level:
+            if ttype[nid] != TAG_OPEN:
+                continue
             node_attrs = attrs_col[nid] or {}
             matches = True
             if tag_name is not None and tname[nid] != tag_name:
@@ -114,12 +115,17 @@ def execute_basic_selector(
                         break
             if matches:
                 results.append(nid)
-        q.extend(tree.children[nid])
+                if len(results) == limit:
+                    return results
     return results
 
 
-def find_matching_nodes(tree: FlatTree, ctx: int, selector: str) -> list[int]:
-    """#findMatchingNodes with :not() support (node.js:1183-1235)."""
+def find_matching_nodes(
+    tree: FlatTree, ctx: int, selector: str, limit: int | None = None
+) -> list[int]:
+    """#findMatchingNodes with :not() support (node.js:1183-1235).
+    ``limit`` reaches only a simple selector's walk (see
+    execute_basic_selector); a :not() form evaluates in full."""
     not_selectors: list[str] = []
 
     def _collect(m: re.Match) -> str:
@@ -134,7 +140,8 @@ def find_matching_nodes(tree: FlatTree, ctx: int, selector: str) -> list[int]:
             if tree.type[nid] == TAG_OPEN
         ]
     else:
-        candidates = execute_basic_selector(tree, ctx, main_selector)
+        candidates = execute_basic_selector(
+            tree, ctx, main_selector, None if not_selectors else limit)
 
     if not not_selectors:
         return candidates
@@ -153,8 +160,13 @@ def find_matching_nodes(tree: FlatTree, ctx: int, selector: str) -> list[int]:
     return results
 
 
-def query_selector_all(tree: FlatTree, ctx: int, selector: str) -> list[int]:
-    """querySelectorAll (node.js:1742-1762)."""
+def query_selector_all(
+    tree: FlatTree, ctx: int, selector: str, limit: int | None = None
+) -> list[int]:
+    """querySelectorAll (node.js:1742-1762).  With ``limit``, the first
+    ``limit`` results are the same and a simple selector (no comma, no
+    descendant space, no :not) stops walking once it has them; other
+    forms still return every match."""
     if "," in selector:
         results: list[int] = []
         seen: set[int] = set()
@@ -164,11 +176,11 @@ def query_selector_all(tree: FlatTree, ctx: int, selector: str) -> list[int]:
                     seen.add(nid)
                     results.append(nid)
         return results
-    return find_matching_nodes(tree, ctx, selector)
+    return find_matching_nodes(tree, ctx, selector, limit)
 
 
 def query_selector(tree: FlatTree, ctx: int, selector: str) -> int | None:
-    results = query_selector_all(tree, ctx, selector)
+    results = query_selector_all(tree, ctx, selector, limit=1)
     return results[0] if results else None
 
 

@@ -25,8 +25,6 @@ without reparenting), which cssFindVariables' scope logic depends on
 
 from __future__ import annotations
 
-from collections import deque
-
 # type codes (stored as strings to match the reference enum verbatim)
 ROOT = "root"
 TAG_OPEN = "tag-open"
@@ -150,17 +148,26 @@ class FlatTree:
                 end[p] = end[nid]
         return end
 
-    def bfs_order(self, start: int = 0) -> list[int]:
-        """Breadth-first node order from ``start`` (inclusive) — the
-        reference's findAll*/querySelector traversal order
-        (node.js:972-1027 queue.shift loop)."""
-        order: list[int] = []
-        q = deque([start])
+    def bfs_levels(self, start: int = 0):
+        """Breadth-first levels from ``start`` (inclusive), one list per
+        depth, built lazily: their concatenation is the reference's
+        findAll*/querySelector traversal order (node.js:972-1027
+        queue.shift loop), and a caller that stops early never builds
+        the levels below the one it stopped in."""
         children = self.children
-        while q:
-            nid = q.popleft()
-            order.append(nid)
-            q.extend(children[nid])
+        level = [start]
+        while level:
+            yield level
+            nxt: list[int] = []
+            for nid in level:
+                nxt += children[nid]
+            level = nxt
+
+    def bfs_order(self, start: int = 0) -> list[int]:
+        """Breadth-first node order from ``start`` (inclusive)."""
+        order: list[int] = []
+        for level in self.bfs_levels(start):
+            order += level
         return order
 
     def iter_preorder(self, start: int = 0):

@@ -12,6 +12,10 @@ replaceWith/remove).  On the fixed main template the edited page
 serializes to a CLOSED-FORM template of (doc_id, text, lang, source),
 so DuckDB can verify the whole parse→query→mutate→serialize pipeline
 per url without executing any of it.
+
+``_run_mutation`` returns only ``{"html": to_html(tree)}`` (comments
+dropped): the edited tree is serialized once, and each step's selector
+walk stops at the match its ``index`` names.
 """
 
 from __future__ import annotations
